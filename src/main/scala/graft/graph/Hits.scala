@@ -35,6 +35,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * plus a broadcast 1-row max. No windows, no collect. */
 object Hits {
 
+  /** Driver-path edge bound for fixed-width keys when the caller passes
+    * none (see the driver-heap guard on [[scores]]). */
+  private val DefaultSmallGraphMaxEdges: Long = 1L << 20
+
   /** Iterate HITS over `edges(src, dst, w)`. Returns one row per
     * node: `(node, hub, auth)` in [0, ~scale] integer units (nodes
     * with no out-edges have hub 0; no in-edges, auth 0).
@@ -51,13 +55,14 @@ object Hits {
     * smaller than the corpus that produced them; pass
     * `smallGraphMaxEdges = 0` to force the distributed rounds.
     *
-    * DRIVER-HEAP GUARD: the default bound assumes fixed-width node
-    * keys (ints/longs — the aggregated-graph shape). For
-    * variable-width keys (strings, structs) the collected Rows plus
-    * the per-iteration score maps can be an order of magnitude
-    * heavier per edge, so the effective bound drops to
-    * `smallGraphMaxEdges / 8` — lower `smallGraphMaxEdges` further
-    * (or pass 0) for graphs with very wide keys on a small driver.
+    * DRIVER-HEAP GUARD: the default bound (any negative
+    * `smallGraphMaxEdges`) is 2^20 edges for fixed-width node keys
+    * (ints/longs — the aggregated-graph shape). For variable-width
+    * keys (strings, structs) the collected Rows plus the per-iteration
+    * score maps can be an order of magnitude heavier per edge, so the
+    * default drops to 2^17. An explicit bound is used as given —
+    * lower it (or pass 0) for graphs with very wide keys on a small
+    * driver.
     *
     * OVERFLOW PARITY NOTE: the driver twin folds each node's incoming
     * contributions sequentially with Math.addExact; the distributed
@@ -68,7 +73,7 @@ object Hits {
     * stays under 2^63 — the documented weight-scale contract above. */
   def scores(edgesIn: DataFrame, iterations: Int,
              scale: Long = 1000000000L,
-             smallGraphMaxEdges: Long = 1L << 20): DataFrame = {
+             smallGraphMaxEdges: Long = -1L): DataFrame = {
     require(iterations >= 1 && scale > 0)
     // weights must be INTEGRAL: a silent cast('long') would truncate
     // w<1 to 0 (edge contributes nothing), contradicting the
@@ -99,7 +104,8 @@ object Hits {
       wChecked.as("w")).localCheckpoint()
     // variable-width keys weigh far more per collected edge than the
     // fixed-width aggregated-graph shape the default bound was sized
-    // for — scale the row bound down (see the driver-heap guard note)
+    // for — scale the DEFAULT row bound down (see the driver-heap
+    // guard note); an explicit bound stays authoritative
     val fixedWidthKeys = Seq(edges.schema(0), edges.schema(1)).forall(
       _.dataType match {
         case _: org.apache.spark.sql.types.NumericType => true
@@ -109,7 +115,9 @@ object Hits {
         case _ => false
       })
     val effectiveMax =
-      if (fixedWidthKeys) smallGraphMaxEdges else smallGraphMaxEdges / 8
+      if (smallGraphMaxEdges >= 0) smallGraphMaxEdges
+      else if (fixedWidthKeys) DefaultSmallGraphMaxEdges
+      else DefaultSmallGraphMaxEdges / 8
     if (effectiveMax > 0 && edges.count() <= effectiveMax) {
       val d = driverScores(edges, iterations, scale)
       if (d.isDefined) return d.get

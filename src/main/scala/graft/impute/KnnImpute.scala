@@ -306,6 +306,22 @@ object KnnImpute {
   // same deterministic fit → same cells → same candidates → same
   // tail; spec-pinned row equality).
 
+  /** Schema of the donor index's `path/stats` side table: the min and
+    * max of every feature column. Reads pass it to the reader, so
+    * serving runs no schema-inference job. */
+  private[graft] def statsSchema(featureCols: Seq[String])
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(featureCols.flatMap(c => Seq(
+      org.apache.spark.sql.types.StructField(s"__mn_$c",
+        org.apache.spark.sql.types.DoubleType),
+      org.apache.spark.sql.types.StructField(s"__mx_$c",
+        org.apache.spark.sql.types.DoubleType))))
+
+  private def readStats(spark: org.apache.spark.sql.SparkSession,
+                        path: String, featureCols: Seq[String]) =
+    spark.read.schema(statsSchema(featureCols)).parquet(s"$path/stats")
+      .collect()(0)
+
   /** Build + persist the donor index: `path/stats`, `path/centroids`,
     * and the bucketed donor table (catalog name `table`). */
   def writeDonorIndex(df: DataFrame, idCol: String, targetCol: String,
@@ -313,7 +329,6 @@ object KnnImpute {
                       numCells: Int = 0, fitIters: Int = 3,
                       numBuckets: Int = 32): Unit = {
     val spark = df.sparkSession
-    import spark.implicits._
     val featOk = featureCols.map(col(_).isNotNull).reduce(_ && _)
     val donors = df.filter(col(targetCol).isNotNull && featOk)
     // one donor scan for stats + count (collectStats scaladoc); the
@@ -321,17 +336,11 @@ object KnnImpute {
     // column names/values/nullability as the old aggregate write, so
     // imputeServe/mergeDonorIndex read an identical file
     val (st, nDonors) = collectStats(donors, featureCols)
-    val statsSchema = org.apache.spark.sql.types.StructType(
-      featureCols.flatMap(c => Seq(
-        org.apache.spark.sql.types.StructField(s"__mn_$c",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField(s"__mx_$c",
-          org.apache.spark.sql.types.DoubleType))))
     val statsRow = org.apache.spark.sql.Row.fromSeq(featureCols.flatMap(
       c => Seq(st(c)._1.map(Double.box).orNull,
         st(c)._2.map(Double.box).orNull)))
     spark.createDataFrame(
-        java.util.Arrays.asList(statsRow), statsSchema)
+        java.util.Arrays.asList(statsRow), statsSchema(featureCols))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
     def scaledVec: Column = array(featureCols.map(c =>
       Scaling.scale(col(c).cast("double"),
@@ -351,9 +360,7 @@ object KnnImpute {
         math.ceil(math.sqrt(nDonors.toDouble)).toInt))
     val model = graft.ml.KMeansLloyd.fit(donorSide, "__did", "__vec",
       cells, fitIters)
-    model.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "c")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    graft.similarity.IvfIndex.writeCentroids(spark, model.centroids, path)
     graft.sources.TableSink.writeBucketed(
       donorSide.withColumn("__cell",
         graft.ml.KMeansLloyd.nearestCell(col("__vec"), model)),
@@ -381,10 +388,9 @@ object KnnImpute {
     val featOk = featureCols.map(col(_).isNotNull).reduce(_ && _)
     val donors = df.filter(col(targetCol).isNotNull && featOk)
     if (donors.isEmpty) return
-    val sr = spark.read.parquet(s"$path/stats").collect()(0)
+    val sr = readStats(spark, path, featureCols)
     val model = graft.ml.KMeansLloyd.Model(
-      spark.read.parquet(s"$path/centroids").orderBy("i").collect()
-        .map(_.getSeq[Double](1).toArray), Seq.empty)
+      graft.similarity.IvfIndex.readCentroids(spark, path), Seq.empty)
     def scaledVec: Column = array(featureCols.map(c =>
       Scaling.scale(col(c).cast("double"),
         statOf(sr, s"__mn_$c"), statOf(sr, s"__mx_$c"))): _*)
@@ -409,12 +415,11 @@ object KnnImpute {
                   k: Int = 5, nProbe: Int = 3): DataFrame = {
     require(featureCols.nonEmpty && k >= 1 && nProbe >= 1)
     val model = graft.ml.KMeansLloyd.Model(
-      spark.read.parquet(s"$path/centroids").orderBy("i").collect()
-        .map(_.getSeq[Double](1).toArray), Seq.empty)
+      graft.similarity.IvfIndex.readCentroids(spark, path), Seq.empty)
     // the persisted stats are ONE row — collect to literals (same
     // doubles, bit-identical scaling) instead of planning a 1-row
     // broadcast join into the batch subtree
-    val sr = spark.read.parquet(s"$path/stats").collect()(0)
+    val sr = readStats(spark, path, featureCols)
     def scaledVec: Column = array(featureCols.map(c =>
       Scaling.scale(col(c).cast("double"),
         statOf(sr, s"__mn_$c"), statOf(sr, s"__mx_$c"))): _*)

@@ -11,15 +11,23 @@ import org.apache.spark.sql.types.NumericType
   * drop's profile (schema drift and null-rate regressions become a
   * trivial diff).
   *
-  * Scale shape: a single scan with hash aggregation. Counts, min, max
-  * and the decimal sum all combine associatively, so partial aggregation
-  * runs map-side and the final merge sees one row per task. The only
-  * non-trivial cost is exact `count(distinct)` over several columns at
-  * once — Catalyst plans that via Expand (one duplicated stream per
-  * distinct column). Exact mode is the oracle/CI shape; at 100 TB pass
-  * `exact = false` and the distinct counts become mergeable HLL
-  * sketches (`approx_count_distinct`, ±~2%), collapsing the plan back
-  * to one stream with no Expand.
+  * Scale shape: every stat combines associatively (counts, min, max,
+  * the decimal sum), so partial aggregation runs map-side and each
+  * final merge sees one row per task. Exact mode plans TWO aggregates
+  * over the same input, cross-joined in one query: a plain global
+  * aggregate holding every non-distinct stat, and one holding only the
+  * `count(distinct)`s. Catalyst plans several distinct columns in one
+  * aggregate via Expand (one duplicated stream per distinct column);
+  * kept apart, that Expand carries only the distinct columns, while
+  * the regular stats skip it entirely and the two branches run as
+  * independent adaptive stages at the same time. The trade at 100 TB
+  * is one more column-pruned scan of the profiled columns against
+  * dropping the regular stats' copy of every row from the Expand
+  * stream. Exact mode is the oracle/CI shape; at 100 TB pass
+  * `exact = false` (or use [[profileAdaptive]], which does so above
+  * 10M rows) and the distinct counts become mergeable HLL sketches
+  * (`approx_count_distinct`, ±~2%) in the ONE aggregate: one scan,
+  * one stream, no Expand.
   *
   * Mean determinism (SURVEY §5.3): a double sum is order-dependent, so
   * the mean goes through an exact decimal(32,6) sum; both engines then
@@ -38,15 +46,12 @@ object ColumnProfile {
     // Aggregate everything to ONE row (positional aliases sidestep any
     // exotic source column names), then pivot that row long with a
     // zero-cost explode over literal structs.
-    val aggs = names.zipWithIndex.flatMap { case (c, i) =>
+    val regular = names.zipWithIndex.flatMap { case (c, i) =>
       val numeric = schema(c).dataType.isInstanceOf[NumericType]
       val d = col(c).cast("double")
-      val nDistinct =
-        if (exact) count_distinct(col(c)) else approx_count_distinct(col(c))
       Seq(
         count(lit(1)).as(s"__nr_$i"),
         (count(lit(1)) - count(col(c))).as(s"__nn_$i"),
-        nDistinct.as(s"__nd_$i"),
         (if (numeric) min(d) else min(lit(null).cast("double")))
           .as(s"__mn_$i"),
         (if (numeric) max(d) else max(lit(null).cast("double")))
@@ -55,7 +60,15 @@ object ColumnProfile {
            sum(col(c).cast("decimal(32,6)")).cast("double") / count(col(c))
          else max(lit(null).cast("double"))).as(s"__av_$i"))
     }
-    val one = df.agg(aggs.head, aggs.tail: _*)
+    val distinct = names.zipWithIndex.map { case (c, i) =>
+      (if (exact) count_distinct(col(c)) else approx_count_distinct(col(c)))
+        .as(s"__nd_$i")
+    }
+    // both sides are global aggregates: one row each, also on empty input
+    val one =
+      if (exact) df.agg(regular.head, regular.tail: _*)
+        .crossJoin(df.agg(distinct.head, distinct.tail: _*))
+      else df.agg(regular.head, regular.tail ++ distinct: _*)
     val rows = names.zipWithIndex.map { case (c, i) =>
       struct(
         lit(c).as("column"),
@@ -70,12 +83,12 @@ object ColumnProfile {
   }
 
   /** Adaptive gate for [[profile]]'s exact-vs-HLL distinct mode: the
-    * Expand-×(6·|cols|) exact-distinct plan is the single heaviest
-    * honest aggregate in the engine (×7-ing a 100 TB scan stream), so
-    * above `exactMaxRows` the profile switches itself to HLL. The row
-    * probe is `limit(n+1).count()` — a LocalLimit that short-circuits
-    * the scan long before corpus size, so the gate costs one bounded
-    * partial pass, not a full count. Every non-distinct stat
+    * exact-distinct Expand copies every row once per profiled column
+    * (×|cols|-ing a 100 TB scan stream), so above `exactMaxRows` the
+    * profile switches itself to HLL. The row probe is
+    * `limit(n+1).count()` — a LocalLimit that short-circuits the scan
+    * long before corpus size, so the gate costs one bounded partial
+    * pass, not a full count. Every non-distinct stat
     * (rows/nulls/min/max/decimal mean) is bit-identical in either mode
     * (ColumnProfileSpec pins this); only `n_distinct` degrades to ±~2%.
     */

@@ -593,11 +593,12 @@ object RelationalQueries extends Registry {
       graft.operators.ColumnProfile.profile(Tables.lineitem(s, d),
         Seq("l_orderkey", "l_quantity", "l_extendedprice", "l_discount",
           "l_returnflag", "l_shipdate", "l_linestatus"))),
-    // the SCALE mode of the same profile: exact=false swaps the
-    // Expand-×7 exact-distinct plan for mergeable HLL sketches (one
-    // stream, no Expand — ColumnProfileSpec asserts the plan). Every
-    // retained column is bit-identical to exact mode, so dropping the
-    // ±2% n_distinct puts the whole scale plan under the exact oracle.
+    // the SCALE mode of the same profile: exact=false swaps the exact
+    // plan's second scan and its Expand-×7 distinct branch for mergeable
+    // HLL sketches (one scan, no Expand — ColumnProfileSpec asserts the
+    // plan). Every retained column is bit-identical to exact mode, so
+    // dropping the ±2% n_distinct puts the whole scale plan under the
+    // exact oracle.
     // profileAdaptive makes this switch itself above 10M rows.
     "d13_column_profile_scale" -> ((s, d) =>
       graft.operators.ColumnProfile.profile(Tables.lineitem(s, d),

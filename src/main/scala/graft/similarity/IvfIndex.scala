@@ -3,6 +3,7 @@ package graft.similarity
 import graft.sources.TableSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persisted IVF index — the 100 TB SERVING shape. [[Cosine.ivfTopK]]
   * re-fits the k-means quantizer and re-assigns cells on every call:
@@ -42,12 +43,8 @@ object IvfIndex {
             seed: Long = 42L, fitSample: Int = 100000,
             numBuckets: Int = 32,
             maxPlanCentroidDoubles: Int = 32768): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val centers = Cosine.fitQuantizer(df, vecCol, numCentroids, seed, fitSample)
-    centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "c")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    writeCentroids(df.sparkSession, centers, path)
     // nProbe = 1 ⇒ __probes(1) is exactly the nearest cell — the same
     // assignment arithmetic (and adaptive literal/broadcast gate) as
     // the one-shot path's index side
@@ -59,10 +56,26 @@ object IvfIndex {
       Seq("__cell"), numBuckets)
   }
 
-  /** Load the persisted centroid matrix (nlist × dim — kilobytes). */
+  /** Schema of the `centroids` side table as [[write]] leaves it. */
+  val CentroidsSchema: StructType = StructType(Seq(
+    StructField("i", IntegerType),
+    StructField("c", ArrayType(DoubleType))))
+
+  /** Persist a centroid matrix as the `centroids` side table, one row
+    * `(i, c)` per cell — the format [[readCentroids]] loads. */
+  private[graft] def writeCentroids(spark: SparkSession,
+      centers: Array[Array[Double]], path: String): Unit = {
+    import spark.implicits._
+    centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("i", "c")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+  }
+
+  /** Load the persisted centroid matrix (nlist × dim — kilobytes): one
+    * scan job under the known schema, ordered on the driver. */
   def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] =
-    spark.read.parquet(s"$path/centroids").orderBy("i").collect()
-      .map(_.getSeq[Double](1).toArray)
+    spark.read.schema(CentroidsSchema).parquet(s"$path/centroids").collect()
+      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   /** INCREMENTALLY add vectors to a persisted index under its FROZEN
     * geometry: new vectors are assigned to their nearest EXISTING

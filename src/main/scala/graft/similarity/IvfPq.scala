@@ -4,6 +4,7 @@ import graft.operators.TopPerGroup
 import graft.sources.TableSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** IVF-PQ — the composed 100 TB vector-serving layout (FAISS
   * `IVFx,PQy`): [[IvfIndex]] gives cell-bucketed locality so a query
@@ -43,9 +44,7 @@ object IvfPq {
     val spark = df.sparkSession
     import spark.implicits._
     val centers = Cosine.fitQuantizer(df, vecCol, numCentroids, seed, fitSample)
-    centers.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "c")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    IvfIndex.writeCentroids(spark, centers, path)
     // cell + unit vector (nProbe=1 ⇒ exactly the nearest cell, the
     // IvfIndex assignment); PQ codebooks fit on the same unit vectors
     val assigned = Cosine.ivfProbes(df, idCol, vecCol, centers,
@@ -72,11 +71,17 @@ object IvfPq {
     cb
   }
 
-  /** Load the persisted PQ codebooks (m × ksub × sub — kilobytes). */
+  /** Schema of the `codebooks` side table as [[write]] leaves it. */
+  val CodebooksSchema: StructType = StructType(Seq(
+    StructField("j", IntegerType), StructField("c", IntegerType),
+    StructField("centroid", ArrayType(DoubleType))))
+
+  /** Load the persisted PQ codebooks (m × ksub × sub — kilobytes). Rows
+    * are placed by `(j, c)`, so they need no ordering. */
   def readCodebooks(spark: SparkSession, path: String,
                     dim: Int): ProductQuantize.Codebooks = {
-    val rows = spark.read.parquet(s"$path/codebooks")
-      .orderBy("j", "c").collect()
+    val rows = spark.read.schema(CodebooksSchema)
+      .parquet(s"$path/codebooks").collect()
     val m = rows.map(_.getInt(0)).max + 1
     val ksub = rows.map(_.getInt(1)).max + 1
     val books = Array.ofDim[Array[Double]](m, ksub)

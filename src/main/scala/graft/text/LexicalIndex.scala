@@ -2,8 +2,9 @@ package graft.text
 
 import graft.operators.TopPerGroup
 import graft.sources.TableSink
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Persisted INVERTED INDEX for BM25 serving — the lexical sibling of
   * [[graft.similarity.IvfIndex]] (dense ANN) and
@@ -37,6 +38,20 @@ import org.apache.spark.sql.functions._
   * ([[Bm25.sql]]) as the recompute, not a weaker rows-only check.
   */
 object LexicalIndex {
+
+  /** Schemas of the `stats` and `terms` side tables as [[write]] and
+    * [[merge]] leave them (SideTableReadsSpec pins them). Reads pass
+    * them to the reader, so serving runs no schema-inference job. */
+  val StatsSchema: StructType = StructType(Seq(
+    StructField("n_docs", LongType), StructField("total_len", LongType)))
+  val TermsSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType)))
+
+  private def readStats(spark: SparkSession, path: String): Row =
+    spark.read.schema(StatsSchema).parquet(s"$path/stats").collect()(0)
+
+  private def readTerms(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(TermsSchema).parquet(s"$path/terms")
 
   /** Build and persist the index. `table` is the catalog name for the
     * bucketed postings (bucket metadata needs a catalog); `path` is the
@@ -121,7 +136,7 @@ object LexicalIndex {
     // stats: one 1-row read, one batch-postings fold, one additive
     // rewrite (same integers as the old doclen fold: docs with >= 1
     // token, total token count)
-    val old = spark.read.parquet(s"$path/stats").collect()(0)
+    val old = readStats(spark, path)
     val add = postings.agg(countDistinct(col("doc_id")).as("n"),
       sum(col("tf")).as("t")).collect()(0)
     import spark.implicits._
@@ -131,7 +146,7 @@ object LexicalIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
     // terms: vocabulary-sized union-sum, MATERIALIZED (localCheckpoint)
     // before overwriting the directory it was read from
-    val updatedTerms = spark.read.parquet(s"$path/terms")
+    val updatedTerms = readTerms(spark, path)
       .unionByName(postings.groupBy(col("term"))
         .agg(count(lit(1)).as("df")))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
@@ -161,13 +176,13 @@ object LexicalIndex {
     require(k1 > 0 && b >= 0 && b <= 1, s"bad BM25 params k1=$k1 b=$b")
     require(maxDfFraction > 0 && maxDfFraction <= 1,
       s"maxDfFraction must be in (0, 1]: $maxDfFraction")
-    val stats = spark.read.parquet(s"$path/stats").collect()(0)
+    val stats = readStats(spark, path)
     val nDocs = stats.getLong(stats.fieldIndex("n_docs"))
     val totalLen = stats.getLong(stats.fieldIndex("total_len"))
     // query terms + df: the query batch broadcasts into the
     // vocabulary-sized terms scan (map-side), then the enriched result
     // (still query-sized) broadcasts into the postings scan
-    val qterms = spark.read.parquet(s"$path/terms")
+    val qterms = readTerms(spark, path)
       .join(broadcast(queries
         .select(col(queryId).as("query_id"),
           explode(TextFunctions.tokens(col(queryText))).as("term"))

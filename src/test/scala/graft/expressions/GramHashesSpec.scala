@@ -7,15 +7,22 @@ import org.apache.spark.sql.functions._
 class GramHashesSpec extends SparkSpec {
 
   test("rolling gram hashes match the fold composition on the corpus (k=1,2,8)") {
-    val docs = Tables.documents(spark, sf0001)
-      .withColumn("__norm", Winnowing.normalize(col("text")))
-      .withColumn("__codes", Winnowing.charCodes(col("__norm")))
-    for (k <- Seq(1, 2, 8)) {
-      val bad = docs.select(
-          Winnowing.gramHashes(col("__norm"), k).as("native"),
-          Winnowing.gramHashesComposed(col("__codes"), k).as("ref"))
-        .filter(not(col("native") <=> col("ref")))
-      assert(bad.count() === 0, s"mismatch at k=$k")
+    val ks = Seq(1, 2, 8)
+    val norm = Winnowing.normalize(col("text"))
+    // the native side runs in Spark; the reference folds the collected
+    // char codes in plain Scala — the same Horner fold per gram as
+    // Winnowing.gramHashesComposed, without its per-gram SQL lambdas
+    val rows = Tables.documents(spark, sf0001)
+      .select(Winnowing.charCodes(norm) +:
+        ks.map(k => Winnowing.gramHashes(norm, k)): _*)
+      .collect()
+    def ref(codes: Seq[Long], k: Int): Seq[Long] =
+      codes.sliding(k).filter(_.size == k)
+        .map(_.foldLeft(0L)((acc, c) => (acc * Winnowing.Base + c) % Winnowing.Mod))
+        .toSeq
+    for ((k, i) <- ks.zipWithIndex) {
+      val bad = rows.count(r => r.getSeq[Long](i + 1) != ref(r.getSeq[Long](0), k))
+      assert(bad === 0, s"mismatch at k=$k")
     }
   }
 

@@ -90,6 +90,22 @@ class HitsSpec extends SparkSpec {
     }
   }
 
+  test("an explicit smallGraphMaxEdges is authoritative for string keys") {
+    val e = Seq(("a", "b", 3L), ("b", "c", 1L), ("c", "a", 2L))
+      .toDF("src", "dst", "w")
+    def onDriver(r: org.apache.spark.sql.DataFrame) =
+      r.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    // a bound below 8 used to be cut to 0 by the variable-width haircut
+    val explicit = Hits.scores(e, iterations = 3, smallGraphMaxEdges = 4)
+    val tooSmall = Hits.scores(e, iterations = 3, smallGraphMaxEdges = 2)
+    val default = Hits.scores(e, iterations = 3)
+    assert(onDriver(explicit) && onDriver(default) && !onDriver(tooSmall))
+    val rows = Seq(explicit, tooSmall, default).map(
+      _.collect().map(x => x.getString(0) -> (x.getLong(1), x.getLong(2))).toMap)
+    assert(rows.distinct.size === 1, "driver and distributed paths differ")
+  }
+
   test("fractional edge weights fail loudly instead of truncating to 0") {
     import spark.implicits._
     val e = Seq((1L, 2L, 0.5)).toDF("src", "dst", "w")

@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 
 class ColumnProfileSpec extends SparkSpec {
 
@@ -9,6 +11,43 @@ class ColumnProfileSpec extends SparkSpec {
 
   private def byCol(df: org.apache.spark.sql.DataFrame): Map[String, Row] =
     df.collect().map(r => r.getString(0) -> r).toMap
+
+  /** The exact profile as ONE aggregate — the formulation before the
+    * distinct counts moved into their own branch, kept as the
+    * reference the two-branch plan must reproduce bit for bit. */
+  private def singleAggProfile(df: DataFrame, names: Seq[String]): DataFrame = {
+    val aggs = names.zipWithIndex.flatMap { case (c, i) =>
+      val numeric = df.schema(c).dataType.isInstanceOf[NumericType]
+      val d = col(c).cast("double")
+      Seq(
+        count(lit(1)).as(s"__nr_$i"),
+        (count(lit(1)) - count(col(c))).as(s"__nn_$i"),
+        count_distinct(col(c)).as(s"__nd_$i"),
+        (if (numeric) min(d) else min(lit(null).cast("double")))
+          .as(s"__mn_$i"),
+        (if (numeric) max(d) else max(lit(null).cast("double")))
+          .as(s"__mx_$i"),
+        (if (numeric)
+           sum(col(c).cast("decimal(32,6)")).cast("double") / count(col(c))
+         else max(lit(null).cast("double"))).as(s"__av_$i"))
+    }
+    val rows = names.zipWithIndex.map { case (c, i) =>
+      struct(lit(c).as("column"), col(s"__nr_$i").as("n_rows"),
+        col(s"__nn_$i").as("n_nulls"), col(s"__nd_$i").as("n_distinct"),
+        col(s"__mn_$i").as("min_d"), col(s"__mx_$i").as("max_d"),
+        col(s"__av_$i").as("mean_d"))
+    }
+    df.agg(aggs.head, aggs.tail: _*)
+      .select(explode(array(rows: _*)).as("__p")).select(col("__p.*"))
+  }
+
+  /** Rows in order with every double as its bit pattern, so -0.0 vs
+    * 0.0 and NaN compare exactly. */
+  private def bits(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    })
 
   test("counts, nulls, distincts, numeric stats") {
     val df = Seq(
@@ -75,6 +114,35 @@ class ColumnProfileSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(exactPlan.contains("Expand"))
     assert(!hllPlan.contains("Expand"))
+  }
+
+  test("two-branch exact plan ≡ the single-aggregate formulation, bit " +
+    "for bit") {
+    def d(s: String) = java.sql.Date.valueOf(s)
+    val df = Seq(
+      (Some(1L), Some(0.0), Some("a"), Some(d("2024-01-01")), Some(1.5f)),
+      (Some(2L), Some(-0.0), None, Some(d("2024-01-01")), Some(-0.0f)),
+      (None, Some(Double.NaN), Some("b"), None, None),
+      (Some(2L), None, Some("a"), Some(d("1999-12-31")), Some(Float.NaN)),
+      (Some(-7L), Some(2.5), Some(""), Some(d("2024-02-29")), Some(0.0f)),
+      (Some(2L), Some(Double.NaN), Some("b"), None, Some(3.25f)))
+      .toDF("k", "v", "s", "dt", "f")
+    val allNull = Seq((Option.empty[Long], Option.empty[String]),
+      (Option.empty[Long], Option.empty[String])).toDF("k", "s")
+    val empty = Seq.empty[(Option[Long], Option[Double], Option[String])]
+      .toDF("k", "v", "s")
+    val li = graft.Tables.lineitem(spark, sf0001)
+    val liCols = Seq("l_orderkey", "l_quantity", "l_discount",
+      "l_linenumber", "l_returnflag", "l_shipdate")
+    for ((name, in, cols) <- Seq(("mixed", df, df.columns.toSeq),
+        ("mixed subset", df, Seq("v", "s")),
+        ("all-null", allNull, allNull.columns.toSeq),
+        ("empty", empty, empty.columns.toSeq),
+        ("lineitem", li, liCols))) {
+      val got = ColumnProfile.profile(in, cols)
+      assert(got.schema === singleAggProfile(in, cols).schema, name)
+      assert(bits(got) === bits(singleAggProfile(in, cols)), name)
+    }
   }
 
   test("adaptive gate: small stays exact, above-threshold flips to HLL") {
