@@ -71,6 +71,18 @@ object Bench {
       if v > 0 && prior.get(name).exists(p => p > 0 && v > 3 * p && v - p > 1.0)
       => name }.toSeq.sorted
 
+  private def esc(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
+  /** A string field of a bench.json line (`"key":"value"`, value as
+    * escaped in the file), or None. */
+  private def stampOf(txt: String, key: String): Option[String] =
+    ("\"" + key + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(txt).map(_.group(1))
+
   /** Load the prior-bench text for the contamination guard: the live
     * `outPath` when present (same-workspace re-runs), else the
     * COMMITTED reference bench (`refPath`). The fallback is what keeps
@@ -78,12 +90,23 @@ object Bench {
     * driver rounds start with no prior and round 17's contended window
     * (a 21 s reading for a 1.5 s query) shipped unflagged — the
     * committed per-round close file still describes last round's
-    * quiet-host timings and catches exactly that. */
-  private[graft] def loadPriorText(outPath: String, refPath: String): String =
-    Seq(outPath, refPath).iterator
-      .flatMap(p => scala.util.Try(Files.readString(Paths.get(p))).toOption)
-      .find(_.contains("\"queries\":{"))
-      .getOrElse("")
+    * quiet-host timings and catches exactly that. A candidate counts
+    * only when it was taken like this run: same `sf` dir and same
+    * `cpus` (a prior without `cpus` is skipped) — timings from other
+    * data or another core count would seed spurious suspects. With no
+    * candidate left the guard is unseeded, and says so. */
+  private[graft] def loadPriorText(outPath: String, refPath: String,
+                                   sfDir: String, cpus: String): String = {
+    val candidates = Seq(outPath, refPath)
+      .flatMap(p => scala.util.Try(Files.readString(Paths.get(p))).toOption.map(p -> _))
+      .filter(_._2.contains("\"queries\":{"))
+    val matching = candidates.collectFirst { case (_, txt)
+      if stampOf(txt, "sf").contains(esc(sfDir)) && stampOf(txt, "cpus").contains(esc(cpus)) => txt }
+    if (matching.isEmpty) System.err.println(
+      s"[bench] contamination guard unseeded: no prior bench at sf=$sfDir, " +
+        s"cpus=$cpus (skipped: ${candidates.map(_._1).mkString(", ")})")
+    matching.getOrElse("")
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -156,18 +179,12 @@ object Bench {
     // reading as a regression.
     val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF",
       "bench_reference.json")
-    val priorTxt = loadPriorText(outPath, refPath)
+    val priorTxt = loadPriorText(outPath, refPath, sfDir, cpus)
     val prior: Map[String, Double] = parseQueries(priorTxt)
     val suspects = suspectsOf(results, prior)
     if (suspects.nonEmpty) System.err.println(
       s"[bench] SUSPECT (>3x their last-round time — likely host " +
         s"contention, re-measure isolated): ${suspects.mkString(", ")}")
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val errJson = errors.map { case (k, v) => s"\"${esc(k)}\":\"${esc(v)}\"" }
       .mkString("{", ",", "}")
     // Stdout gets a BOUNDED errors object: round 7 had 118 failures and
@@ -218,7 +235,7 @@ object Bench {
     def render(qEntries: Seq[String], extra: String,
                errs: String = errJson): String = {
       val qs = qEntries.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total, "%.3f")},"unit":"sec","queries":$qs,"errors":$errs,"errors_n":${errors.size},"suspect":$suspectJson$extra,"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":${fmt(total, "%.3f")},"unit":"sec","queries":$qs,"errors":$errs,"errors_n":${errors.size},"suspect":$suspectJson$extra,"sf":"${esc(sfDir)}","cpus":"${esc(cpus)}"}"""
     }
     // Full-precision JSON goes to the file (per-query history for the
     // judge); stdout gets a compacted line. The driver keeps only a

@@ -130,14 +130,13 @@ object SegmentedImpute {
               } else x(i, 0) = (num(r, valueIdx) - mn) / range
               i += 1
             }
-            val wts = RbmCore.fit(x, known, cfg).weights
+            val wts = RbmCore.Flat(RbmCore.fit(x, known, cfg).weights)
             rows.iterator.map { r =>
               if (!isMissing(r)) r
               else {
-                val vin = DenseMatrix.create(1, 1,
+                val recon = RbmCore.reconstruct(wts,
                   Array(hashNoiseLocal(numKey(r, keyIdx), 9001)))
-                val recon = RbmCore.reconstruct(wts, vin)
-                val filled = recon(0, 0) * range + mn
+                val filled = recon(0) * range + mn
                 Row.fromSeq(r.toSeq.updated(valueIdx,
                   castBack(filled, schema(valueIdx).dataType)))
               }

@@ -1,7 +1,6 @@
 package graft.ml
 
-import breeze.linalg.{*, DenseMatrix, DenseVector}
-import breeze.numerics.sigmoid
+import breeze.linalg.{DenseMatrix, DenseVector}
 
 import scala.util.Random
 
@@ -17,17 +16,32 @@ final case class RbmWeights(
   def nHidden: Int = w.cols
 }
 
-/** Pure-Breeze (no Spark) CD-1 Restricted Boltzmann Machine — the math
-  * core of the reference's TensorFlow graph (upstream: rbm.py; see
-  * SURVEY.md §3.2 — /root/reference was empty, semantics derive from the
-  * public upstream repo): sigmoid units, contrastive divergence k=1,
-  * minibatch SGD with optional AdaGrad, dropout on the hidden layer,
-  * early stopping on held-out-cell reconstruction error. Deterministic
-  * given the seed.
+/** CD-1 Restricted Boltzmann Machine — the math core of the
+  * reference's TensorFlow graph (upstream: rbm.py; see SURVEY.md §3.2 —
+  * semantics derive from the public upstream repo): sigmoid units,
+  * contrastive divergence k=1, minibatch SGD with optional AdaGrad,
+  * dropout on the hidden layer, early stopping on held-out-cell
+  * reconstruction error. Deterministic given the seed.
   *
   * Inputs are matrices with rows = samples, every cell in [0,1]; missing
   * cells arrive already noise-filled (Encoding A8) with `known` marking
   * originally-present cells.
+  *
+  * Arithmetic: the local trainer [[fit]] and every reconstruct run on
+  * the primitive kernels below, over row-major `Array[Double]` buffers
+  * ([[Flat]]). They reproduce, bit for bit, the Breeze formulation they
+  * replaced (kept as the reference in RbmCoreSpec). That formulation
+  * ran its matrix products through `dev.ludovic.netlib`'s `Java11BLAS`
+  * (no native BLAS, no `jdk.incubator.vector`), whose dgemm computes
+  * each output cell as `Math.fma` accumulations starting from 0.0 in
+  * index order — so each product here is one fma chain per cell, in the
+  * same order. σ(z) is `1/(1+exp(−z))`, Breeze's `sigmoid`. The bound:
+  * once m·n·k ≥ 10⁶, `Java11BLAS` splits an inner dimension k > 500
+  * into 500-wide blocks and adds the block sums; the kernels keep one
+  * chain. So the parity holds while nVisible, nHidden and batchSize are
+  * each at most 500 (RbmCoreSpec pins it, and that `Java11BLAS` is the
+  * BLAS in use). Only `fitDistributed`'s per-row gradient still uses
+  * Breeze (GEMV).
   */
 object RbmCore {
 
@@ -50,20 +64,101 @@ object RbmCore {
       DenseVector.zeros[Double](cfg.nHidden))
   }
 
-  /** Deterministic up-down pass on probabilities (no sampling) — the
-    * reference's transform semantics: v' = σ(σ(vW+c)Wᵀ+b). */
-  def reconstruct(wts: RbmWeights, v: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val hIn = v * wts.w
-    val h = sigmoid(hIn(*, ::) + wts.hBias)
-    val vIn = h * wts.w.t
-    sigmoid(vIn(*, ::) + wts.vBias)
+  /** The weights as row-major primitive arrays, which every kernel
+    * reads: `w(i * nh + j)` is W(i, j). */
+  final class Flat(val nv: Int, val nh: Int, val w: Array[Double],
+                   val vBias: Array[Double], val hBias: Array[Double]) {
+    def copy: Flat = new Flat(nv, nh, w.clone, vBias.clone, hBias.clone)
+
+    def toWeights: RbmWeights = {
+      val colMajor = new Array[Double](nv * nh)
+      var i = 0
+      while (i < nv) {
+        var j = 0
+        while (j < nh) { colMajor(j * nv + i) = w(i * nh + j); j += 1 }
+        i += 1
+      }
+      RbmWeights(new DenseMatrix(nv, nh, colMajor),
+        DenseVector(vBias.clone), DenseVector(hBias.clone))
+    }
   }
 
-  /** σ(xM + bias) with bias broadcast across rows. */
-  private def affineSigmoid(x: DenseMatrix[Double], m: DenseMatrix[Double],
-                            bias: DenseVector[Double]): DenseMatrix[Double] = {
-    val z = x * m
-    sigmoid(z(*, ::) + bias)
+  object Flat {
+    def apply(wts: RbmWeights): Flat = {
+      val nv = wts.nVisible
+      val nh = wts.nHidden
+      val w = new Array[Double](nv * nh)
+      var i = 0
+      while (i < nv) {
+        var j = 0
+        while (j < nh) { w(i * nh + j) = wts.w(i, j); j += 1 }
+        i += 1
+      }
+      new Flat(nv, nh, w, wts.vBias.toArray, wts.hBias.toArray)
+    }
+  }
+
+  @inline private def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
+
+  /** out(r, ·) = σ(x(r, ·)·W + c) for the first `m` rows of the
+    * row-major m×nv `x`. */
+  private def hidden(f: Flat, x: Array[Double], m: Int, out: Array[Double]): Unit = {
+    val nv = f.nv
+    val nh = f.nh
+    var r = 0
+    while (r < m) {
+      val xo = r * nv
+      val ho = r * nh
+      java.util.Arrays.fill(out, ho, ho + nh, 0.0)
+      var i = 0
+      while (i < nv) {
+        val xi = x(xo + i)
+        val wo = i * nh
+        var j = 0
+        while (j < nh) { out(ho + j) = Math.fma(xi, f.w(wo + j), out(ho + j)); j += 1 }
+        i += 1
+      }
+      var j = 0
+      while (j < nh) { out(ho + j) = sigmoid(out(ho + j) + f.hBias(j)); j += 1 }
+      r += 1
+    }
+  }
+
+  /** out(r, ·) = σ(h(r, ·)·Wᵀ + b) for the first `m` rows of the
+    * row-major m×nh `h`. */
+  private def visible(f: Flat, h: Array[Double], m: Int, out: Array[Double]): Unit = {
+    val nv = f.nv
+    val nh = f.nh
+    var r = 0
+    while (r < m) {
+      val ho = r * nh
+      var i = 0
+      while (i < nv) {
+        val wo = i * nh
+        var acc = 0.0
+        var j = 0
+        while (j < nh) { acc = Math.fma(h(ho + j), f.w(wo + j), acc); j += 1 }
+        out(r * nv + i) = sigmoid(acc + f.vBias(i))
+        i += 1
+      }
+      r += 1
+    }
+  }
+
+  /** Deterministic up-down pass on probabilities (no sampling) — the
+    * reference's transform semantics: v' = σ(σ(vW+c)Wᵀ+b), for the first
+    * `m` rows of the row-major `x` into `out`; `h` is m×nh scratch. */
+  def reconstruct(f: Flat, x: Array[Double], m: Int,
+                  h: Array[Double], out: Array[Double]): Unit = {
+    hidden(f, x, m, h)
+    visible(f, h, m, out)
+  }
+
+  /** [[reconstruct]] of the one row `v`. */
+  def reconstruct(f: Flat, v: Array[Double]): Array[Double] = {
+    val out = new Array[Double](f.nv)
+    reconstruct(f, v, 1, new Array[Double](f.nh), out)
+    out
   }
 
   final case class FitResult(weights: RbmWeights, epochErrors: Seq[Double])
@@ -112,20 +207,25 @@ object RbmCore {
       data.unpersist(blocking = false)
       return FitResult(init(nv, cfg), Seq.empty)
     }
-    val valX = BM.tabulate(valRows.length, nv)((i, j) => valRows(i)._1(j))
+    val nVal = valRows.length
+    val valX = new Array[Double](nVal * nv)
+    var r = 0
+    while (r < nVal) { System.arraycopy(valRows(r)._1, 0, valX, r * nv, nv); r += 1 }
+    val valH = new Array[Double](nVal * nh)
+    val recon = new Array[Double](nVal * nv)
     // NaN = "no early-stopping signal" (empty holdout): training then
     // runs to maxEpochs instead of silently stopping after patience+1
     // epochs on a constant fake 0.0 error
     def valError(w: RbmWeights): Double = {
       if (valRows.isEmpty) return Double.NaN
-      val recon = reconstruct(w, valX)
+      reconstruct(Flat(w), valX, nVal, valH, recon)
       var se = 0.0; var cnt = 0L
       var i = 0
-      while (i < valRows.length) {
+      while (i < nVal) {
         val k = valRows(i)._2
         var j = 0
         while (j < nv) {
-          if (k(j)) { val d = recon(i, j) - valX(i, j); se += d * d; cnt += 1 }
+          if (k(j)) { val d = recon(i * nv + j) - valX(i * nv + j); se += d * d; cnt += 1 }
           j += 1
         }
         i += 1
@@ -210,96 +310,182 @@ object RbmCore {
   /** Trains on `x` (noise-filled, [0,1] cells). A deterministic fraction
     * of `known` cells is hidden from training (replaced with noise) and
     * used as the early-stopping validation set — the reference's A9/A17
-    * holdout. Returns the best-validation weights. */
+    * holdout. Returns the best-validation weights. Runs on the
+    * primitive kernels: its buffers are allocated once per fit, and the
+    * RNG draws keep the Breeze formulation's order (holdout, per-epoch
+    * shuffle, hidden states column-major, one dropout draw per hidden
+    * unit). */
   def fit(x: DenseMatrix[Double], known: DenseMatrix[Boolean], cfg: Config): FitResult = {
     val rng = new Random(cfg.seed)
     val n = x.rows
     val nv = x.cols
+    val nh = cfg.nHidden
     require(known.rows == n && known.cols == nv, "mask shape mismatch")
+    require(cfg.batchSize > 0, "batchSize must be positive")
     if (n == 0) return FitResult(init(nv, cfg), Seq.empty)
 
-    // A9: hide a fraction of known cells; train sees noise there.
-    val holdout = DenseMatrix.fill[Boolean](n, nv)(false)
-    val train = x.copy
+    // A9: hide a fraction of known cells; train sees noise there. The
+    // hidden cells' true values are kept in row-major order.
+    val train = new Array[Double](n * nv)
+    val heldIdx = Array.newBuilder[Int]
+    val heldVal = Array.newBuilder[Double]
     var i = 0
     while (i < n) {
       var j = 0
       while (j < nv) {
+        train(i * nv + j) = x(i, j)
         if (known(i, j) && rng.nextDouble() < cfg.holdoutFraction) {
-          holdout(i, j) = true
-          train(i, j) = rng.nextDouble()
+          heldIdx += i * nv + j
+          heldVal += x(i, j)
+          train(i * nv + j) = rng.nextDouble()
         }
         j += 1
       }
       i += 1
     }
+    val held = heldIdx.result()
+    val heldX = heldVal.result()
 
-    var wts = init(nv, cfg)
-    val cacheW = DenseMatrix.zeros[Double](nv, cfg.nHidden)
-    val cacheB = DenseVector.zeros[Double](nv)
-    val cacheC = DenseVector.zeros[Double](cfg.nHidden)
+    val wts = Flat(init(nv, cfg))
+    val cacheW = new Array[Double](nv * nh)
+    val cacheB = new Array[Double](nv)
+    val cacheC = new Array[Double](nh)
     val eps = 1e-8
+    val bs = math.min(cfg.batchSize, n)
+    val v0 = new Array[Double](bs * nv)
+    val h0p = new Array[Double](bs * nh)
+    val h0s = new Array[Double](bs * nh)
+    val v1p = new Array[Double](bs * nv)
+    val h1p = new Array[Double](bs * nh)
+    val pos = new Array[Double](nv * nh)
+    val neg = new Array[Double](nv * nh)
+    val gB = new Array[Double](nv)
+    val gC = new Array[Double](nh)
+    val rowV = new Array[Double](nv)
+    val rowH = new Array[Double](nh)
+    val rowOut = new Array[Double](nv)
 
-    def valError(w: RbmWeights): Double = {
-      val recon = reconstruct(w, train)
-      var se = 0.0; var cnt = 0L
-      var i = 0
-      while (i < n) {
-        var j = 0
-        while (j < nv) {
-          if (holdout(i, j)) { val d = recon(i, j) - x(i, j); se += d * d; cnt += 1 }
-          j += 1
-        }
-        i += 1
-      }
-      if (cnt == 0) Double.NaN else se / cnt
+    def update(p: Array[Double], g: Array[Double], cache: Array[Double]): Unit = {
+      var k = 0
+      if (cfg.adagrad) while (k < p.length) {
+        val d = g(k)
+        cache(k) += d * d
+        p(k) = p(k) + (d * cfg.learnRate) / math.sqrt(cache(k) + eps)
+        k += 1
+      } else while (k < p.length) { p(k) = p(k) + g(k) * cfg.learnRate; k += 1 }
     }
 
-    var best = wts
+    /** One CD-1 step on the m rows `order(start until start + m)`. */
+    def step(order: Array[Int], start: Int, m: Int): Unit = {
+      var r = 0
+      while (r < m) { System.arraycopy(train, order(start + r) * nv, v0, r * nv, nv); r += 1 }
+      hidden(wts, v0, m, h0p)
+      // sample hidden states column-major (unit outer, row inner), then dropout
+      var j = 0
+      while (j < nh) {
+        r = 0
+        while (r < m) {
+          h0s(r * nh + j) = if (rng.nextDouble() < h0p(r * nh + j)) 1.0 else 0.0
+          r += 1
+        }
+        j += 1
+      }
+      if (cfg.dropout > 0) {
+        j = 0
+        while (j < nh) {
+          if (rng.nextDouble() < cfg.dropout) {
+            r = 0
+            while (r < m) { h0s(r * nh + j) = 0.0; r += 1 }
+          }
+          j += 1
+        }
+      }
+      visible(wts, h0s, m, v1p)
+      hidden(wts, v1p, m, h1p)
+      // dW = (v0ᵀ·h0p − v1pᵀ·h1p) / b, each product one fma chain over rows
+      java.util.Arrays.fill(pos, 0.0)
+      java.util.Arrays.fill(neg, 0.0)
+      r = 0
+      while (r < m) {
+        var i = 0
+        while (i < nv) {
+          val a = v0(r * nv + i)
+          val c = v1p(r * nv + i)
+          val wo = i * nh
+          j = 0
+          while (j < nh) {
+            pos(wo + j) = Math.fma(a, h0p(r * nh + j), pos(wo + j))
+            neg(wo + j) = Math.fma(c, h1p(r * nh + j), neg(wo + j))
+            j += 1
+          }
+          i += 1
+        }
+        r += 1
+      }
+      val b = m.toDouble
+      var k = 0
+      while (k < pos.length) { pos(k) = (pos(k) - neg(k)) / b; k += 1 }
+      // bias gradients: column sums of the differences, left to right
+      var i = 0
+      while (i < nv) {
+        var s = 0.0
+        r = 0
+        while (r < m) { s += v0(r * nv + i) - v1p(r * nv + i); r += 1 }
+        gB(i) = s / b
+        i += 1
+      }
+      j = 0
+      while (j < nh) {
+        var s = 0.0
+        r = 0
+        while (r < m) { s += h0p(r * nh + j) - h1p(r * nh + j); r += 1 }
+        gC(j) = s / b
+        j += 1
+      }
+      update(wts.w, pos, cacheW)
+      update(wts.vBias, gB, cacheB)
+      update(wts.hBias, gC, cacheC)
+    }
+
+    // reconstructs only the rows holding a held-out cell, one at a time
+    def valError(f: Flat): Double = {
+      var se = 0.0
+      var row = -1
+      var p = 0
+      while (p < held.length) {
+        val r = held(p) / nv
+        if (r != row) {
+          System.arraycopy(train, r * nv, rowV, 0, nv)
+          reconstruct(f, rowV, 1, rowH, rowOut)
+          row = r
+        }
+        val d = rowOut(held(p) - r * nv) - heldX(p)
+        se += d * d
+        p += 1
+      }
+      if (held.isEmpty) Double.NaN else se / held.length
+    }
+
+    var best = wts.copy
     var bestErr = Double.MaxValue
     var bad = 0
     val errors = Seq.newBuilder[Double]
     var epoch = 0
     while (epoch < cfg.maxEpochs && bad < cfg.patience) {
-      val order = rng.shuffle((0 until n).toVector)
-      order.grouped(cfg.batchSize).foreach { idx =>
-        val v0 = DenseMatrix.tabulate(idx.size, nv)((r, c) => train(idx(r), c))
-        val h0p = affineSigmoid(v0, wts.w, wts.hBias)
-        // sample hidden states, then dropout
-        val h0s = h0p.mapValues(p => if (rng.nextDouble() < p) 1.0 else 0.0)
-        if (cfg.dropout > 0) {
-          var j = 0
-          while (j < cfg.nHidden) {
-            if (rng.nextDouble() < cfg.dropout) h0s(::, j) := 0.0
-            j += 1
-          }
-        }
-        val v1p = affineSigmoid(h0s, wts.w.t, wts.vBias)
-        val h1p = affineSigmoid(v1p, wts.w, wts.hBias)
-        val b = idx.size.toDouble
-        val dW = (v0.t * h0p - v1p.t * h1p) /:/ b
-        val dB = breeze.linalg.sum(v0 - v1p, breeze.linalg.Axis._0).t /:/ b
-        val dC = breeze.linalg.sum(h0p - h1p, breeze.linalg.Axis._0).t /:/ b
-        if (cfg.adagrad) {
-          cacheW :+= dW *:* dW; cacheB :+= dB *:* dB; cacheC :+= dC *:* dC
-          wts = RbmWeights(
-            wts.w + (dW *:* cfg.learnRate) /:/ breeze.numerics.sqrt(cacheW + eps),
-            wts.vBias + (dB *:* cfg.learnRate) /:/ breeze.numerics.sqrt(cacheB + eps),
-            wts.hBias + (dC *:* cfg.learnRate) /:/ breeze.numerics.sqrt(cacheC + eps))
-        } else {
-          wts = RbmWeights(
-            wts.w + dW *:* cfg.learnRate,
-            wts.vBias + dB *:* cfg.learnRate,
-            wts.hBias + dC *:* cfg.learnRate)
-        }
+      val order = rng.shuffle((0 until n).toVector).toArray
+      var start = 0
+      while (start < n) {
+        val m = math.min(cfg.batchSize, n - start)
+        step(order, start, m)
+        start += m
       }
       val err = valError(wts)
       errors += err
       if (err.isNaN) { /* no holdout → no early-stop signal */ }
-      else if (err < bestErr - 1e-12) { bestErr = err; best = wts; bad = 0 }
+      else if (err < bestErr - 1e-12) { bestErr = err; best = wts.copy; bad = 0 }
       else bad += 1
       epoch += 1
     }
-    FitResult(if (bestErr < Double.MaxValue) best else wts, errors.result())
+    FitResult((if (bestErr < Double.MaxValue) best else wts).toWeights, errors.result())
   }
 }

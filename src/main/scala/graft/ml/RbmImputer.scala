@@ -6,8 +6,10 @@ import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable,
   Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StructType}
+import graft.expressions.RbmReconstruct
+import org.apache.spark.sql.{DataFrame, Dataset, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.functions.{array_contains, col, when}
+import org.apache.spark.sql.types.StructType
 
 /** MLlib-style `Estimator`/`Model` pair for RBM-based missing-value
   * imputation — the Spark-native re-expression of the reference's
@@ -21,13 +23,17 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StructType}
   *    top-K distinct) + one bounded `collect` of an encoded sample
   *    (`sampleLimit` rows — the RBM is a few-thousand-parameter model;
   *    a bounded uniform sample is statistically faithful at any SF),
-  *    then driver-local Breeze CD-1 training. Nothing quadratic in
-  *    cluster size; sample never exceeds `sampleLimit` rows regardless
-  *    of input scale.
-  *  - `transform`: weights broadcast once; reconstruction is a
-  *    shuffle-free `mapPartitions` doing one batched Breeze GEMM per
-  *    1024-row block; encode/merge/decode are Column projections inside
-  *    whole-stage codegen.
+  *    then driver-local CD-1 training on RbmCore's primitive fma
+  *    kernels. Nothing quadratic in cluster size; sample never exceeds
+  *    `sampleLimit` rows regardless of input scale.
+  *  - `transform`: one projection chain inside whole-stage codegen —
+  *    encode, then the native [[graft.expressions.RbmReconstruct]]
+  *    (weights broadcast once) on rows with a missing target cell,
+  *    then decode. A row with every target cell known skips the kernel.
+  *    No shuffle and no external-Row conversion.
+  *
+  * Both paths reproduce the former Breeze formulation bit for bit
+  * under RbmCore's parity contract (fma chains in `Java11BLAS` order).
   */
 class RbmImputer(override val uid: String) extends Estimator[RbmImputerModel]
     with DefaultParamsWritable {
@@ -156,23 +162,13 @@ class RbmImputerModel(
 
   override def transform(ds: Dataset[_]): DataFrame = {
     val df = ds.toDF()
-    val originalColumns = df.schema.fieldNames.toSeq
-    val encoded = Encoding.encode(df, layout, $(keyCol))
-    val outSchema = encoded.schema.add(Encoding.ReconCol, ArrayType(DoubleType, false))
     val bc = df.sparkSession.sparkContext.broadcast(weights)
-    val vIdx = encoded.schema.fieldIndex(Encoding.VCol)
-    val width = layout.width
-    val reconDf = encoded.mapPartitions { it: Iterator[Row] =>
-      it.grouped(1024).flatMap { batch =>
-        val v = DenseMatrix.tabulate(batch.size, width)(
-          (r, c) => batch(r).getSeq[Double](vIdx)(c))
-        val recon = RbmCore.reconstruct(bc.value, v)
-        batch.iterator.zipWithIndex.map { case (row, r) =>
-          Row.fromSeq(row.toSeq :+ (0 until width).map(recon(r, _)))
-        }
-      }
-    }(Encoders.row(outSchema))
-    Encoding.decode(reconDf, layout, originalColumns)
+    val recon = GraftColumnBridge.column(
+      RbmReconstruct(GraftColumnBridge.expression(col(Encoding.VCol)), bc))
+    // decode reads __recon only where a target cell is missing
+    val withRecon = Encoding.encode(df, layout, $(keyCol)).withColumn(Encoding.ReconCol,
+      when(array_contains(col(Encoding.KnownCol), false), recon))
+    Encoding.decode(withRecon, layout, df.schema.fieldNames.toSeq)
   }
 
   override def transformSchema(schema: StructType): StructType = schema
@@ -213,12 +209,21 @@ object RbmImputerModel extends MLReadable[RbmImputerModel] {
     hBias = m.weights.hBias.toArray.toSeq,
     epochErrors = m.epochErrors)
 
+  /** Rebuilds a saved model, refusing one whose shapes disagree — such
+    * a model would otherwise load and fail only inside a transform task. */
   private def fromData(d: ModelData): RbmImputerModel = {
     val layout = ColumnLayout(
       d.numericNames.indices.map(i =>
         graft.impute.NumericStats(d.numericNames(i), d.numericMins(i), d.numericMaxs(i))),
       d.catNames.indices.map(i =>
         graft.impute.CategoryInfo(d.catNames(i), d.catValues(i))))
+    def shape(what: String, got: Int, want: Int, of: String): Unit =
+      require(got == want, s"saved RbmImputerModel ${d.uid}: $what is $got, " +
+        s"but $of is $want")
+    shape("the layout width", layout.width, d.nVisible, "nVisible")
+    shape("the vBias length", d.vBias.length, d.nVisible, "nVisible")
+    shape("the hBias length", d.hBias.length, d.nHidden, "nHidden")
+    shape("the weight count", d.w.length, d.nVisible * d.nHidden, "nVisible × nHidden")
     val weights = RbmWeights(
       new breeze.linalg.DenseMatrix(d.nVisible, d.nHidden, d.w.toArray),
       breeze.linalg.DenseVector(d.vBias.toArray),

@@ -48,9 +48,9 @@ class BenchGateSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(ref,
       """{"metric":"total","value":3.0,"unit":"sec",""" +
         """"queries":{"c4_matryoshka_recall":1.5,"fast_q":0.2},""" +
-        """"errors":{},"sf":"x"}""")
+        """"errors":{},"sf":"x","cpus":"4"}""")
     val missingOut = dir.resolve("bench.json").toString // does not exist
-    val txt = Bench.loadPriorText(missingOut, ref.toString)
+    val txt = Bench.loadPriorText(missingOut, ref.toString, "x", "4")
     val prior = Bench.parseQueries(txt)
     assert(prior === Map("c4_matryoshka_recall" -> 1.5, "fast_q" -> 0.2))
     val results = Seq("c4_matryoshka_recall" -> 7.5, // 5x AND +1s: flags
@@ -59,21 +59,51 @@ class BenchGateSpec extends AnyFunSuite {
     // live bench.json (when present) wins over the reference
     val live = dir.resolve("live.json")
     java.nio.file.Files.writeString(live,
-      """{"metric":"total","queries":{"c4_matryoshka_recall":9.0},"sf":"x"}""")
+      """{"metric":"total","queries":{"c4_matryoshka_recall":9.0},"sf":"x","cpus":"4"}""")
     val livePrior = Bench.parseQueries(
-      Bench.loadPriorText(live.toString, ref.toString))
+      Bench.loadPriorText(live.toString, ref.toString, "x", "4"))
     assert(livePrior === Map("c4_matryoshka_recall" -> 9.0))
     assert(Bench.suspectsOf(results, livePrior).isEmpty)
     // neither file present: guard degrades to silent, never throws
     assert(Bench.loadPriorText(missingOut,
-      dir.resolve("nope.json").toString) === "")
-    // the committed repo reference actually exists and parses — the
-    // fallback is live on a fresh checkout, not just in this sandbox
+      dir.resolve("nope.json").toString, "x", "4") === "")
+    // the committed repo reference actually exists and parses
     val repoRef = java.nio.file.Paths.get("bench_reference.json")
     assert(java.nio.file.Files.exists(repoRef),
       "bench_reference.json must be committed at the repo root")
     assert(Bench.parseQueries(java.nio.file.Files.readString(repoRef))
       .nonEmpty, "the committed reference must carry a queries map")
+  }
+
+  test("the guard skips a prior taken on other data or another core " +
+    "count, and falls back to one that matches") {
+    val dir = java.nio.file.Files.createTempDirectory("benchstamp")
+    def write(name: String, sf: String, cpus: Option[String], q: Double): String = {
+      val p = dir.resolve(name)
+      java.nio.file.Files.writeString(p,
+        s"""{"metric":"total","queries":{"q1":$q},"errors":{},""" +
+          s""""sf":"$sf"""" + cpus.fold("")(c => s""","cpus":"$c"""") + "}")
+      p.toString
+    }
+    val run = ("/data/sf0.1", "8")
+    def prior(out: String, ref: String): Map[String, Double] =
+      Bench.parseQueries(Bench.loadPriorText(out, ref, run._1, run._2))
+    val good = write("good.json", "/data/sf0.1", Some("8"), 1.0)
+    val otherSf = write("sf.json", "/data/sf0.01", Some("8"), 2.0)
+    val otherCpus = write("cpus.json", "/data/sf0.1", Some("32"), 3.0)
+    val noCpus = write("nocpus.json", "/data/sf0.1", None, 4.0)
+    // sf mismatch, cpus mismatch, cpus missing: each alone seeds nothing
+    Seq(otherSf, otherCpus, noCpus).foreach { p =>
+      assert(prior(p, dir.resolve("nope.json").toString).isEmpty, p)
+      assert(prior(dir.resolve("nope.json").toString, p).isEmpty, p)
+    }
+    // a mismatched live file falls back to the matching reference
+    Seq(otherSf, otherCpus, noCpus).foreach { p =>
+      assert(prior(p, good) === Map("q1" -> 1.0), p)
+    }
+    // and a matching live file still wins over a matching reference
+    val goodLive = write("live.json", "/data/sf0.1", Some("8"), 5.0)
+    assert(prior(goodLive, good) === Map("q1" -> 5.0))
   }
 
   test("parseFamilies round-trips the bench.json families object and " +

@@ -52,10 +52,11 @@ class PropertiesSpec extends AnyFunSuite {
       wts <- Gen.listOfN(nv * nh, Gen.chooseNum(-3.0, 3.0))
     } yield (n, nv, nh, cells, wts)
     check(Prop.forAll(gen) { case (n, nv, nh, cells, wts) =>
-      val v = new DenseMatrix(n, nv, cells.toArray)
-      val w = RbmWeights(new DenseMatrix(nv, nh, wts.toArray),
-        DenseVector.zeros[Double](nv), DenseVector.zeros[Double](nh))
-      RbmCore.reconstruct(w, v).toArray.forall(x => x > 0.0 && x < 1.0)
+      val w = RbmCore.Flat(RbmWeights(new DenseMatrix(nv, nh, wts.toArray),
+        DenseVector.zeros[Double](nv), DenseVector.zeros[Double](nh)))
+      val out = new Array[Double](n * nv)
+      RbmCore.reconstruct(w, cells.toArray, n, new Array[Double](n * nh), out)
+      out.forall(x => x > 0.0 && x < 1.0)
     })
   }
 

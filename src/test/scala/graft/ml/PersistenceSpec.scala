@@ -48,4 +48,26 @@ class PersistenceSpec extends SparkSpec {
     val b = loadedPm.transform(withMissing).orderBy("c_custkey").collect()
     assert(a.toSeq === b.toSeq)
   }
+
+  test("a saved model whose shapes disagree fails at load, naming the mismatch") {
+    val model = imputer.fit(withMissing)
+    val dir = java.nio.file.Files.createTempDirectory("rbm_tamper").toString
+    model.save(s"$dir/m")
+    val data = spark.read.parquet(s"$dir/m/data").cache()
+    assert(data.count() === 1)
+    val cases = Seq(
+      "layout width" -> data.withColumn("catValues",
+        transform(col("catValues"), v => slice(v, 2, 1000))),
+      "vBias length" -> data.withColumn("vBias", slice(col("vBias"), 2, 1000)),
+      "hBias length" -> data.withColumn("hBias", concat(col("hBias"), array(lit(0.0)))),
+      "weight count" -> data.withColumn("w", slice(col("w"), 2, 100000)))
+    cases.zipWithIndex.foreach { case ((what, tampered), i) =>
+      model.save(s"$dir/t$i")
+      tampered.write.mode("overwrite").parquet(s"$dir/t$i/data")
+      val e = intercept[IllegalArgumentException](RbmImputerModel.load(s"$dir/t$i"))
+      assert(e.getMessage.contains(what), e.getMessage)
+    }
+    // the untampered copy still loads
+    assert(RbmImputerModel.load(s"$dir/m").weights.w === model.weights.w)
+  }
 }

@@ -1,8 +1,12 @@
 package graft.ml
 
+import breeze.linalg.DenseMatrix
 import graft.{SparkSpec, Tables}
 import graft.functions.Noise
+import graft.impute.Encoding
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Reference-contract invariants (SURVEY §5.1 i–v) for the full
   * Estimator/Model imputation pipeline on real test data. */
@@ -57,5 +61,106 @@ class RbmImputerSpec extends SparkSpec {
     assert(imputed.schema.fieldNames.toSeq ===
       withMissing.schema.fieldNames.toSeq)
     assert(imputed.count() === withMissing.count())
+  }
+
+  /** `transform` as it ran before the native expression: a
+    * `mapPartitions` over `Encoders.row` with one Breeze reconstruct per
+    * 1024-row block (RbmCoreSpec.reconstruct is that Breeze pass). */
+  private def rowPathTransform(model: RbmImputerModel, df: DataFrame): DataFrame = {
+    val encoded = Encoding.encode(df, model.layout, model.getOrDefault(model.keyCol))
+    val outSchema = encoded.schema.add(Encoding.ReconCol, ArrayType(DoubleType, false))
+    val bc = spark.sparkContext.broadcast(model.weights)
+    val vIdx = encoded.schema.fieldIndex(Encoding.VCol)
+    val width = model.layout.width
+    val reconDf = encoded.mapPartitions { it: Iterator[Row] =>
+      it.grouped(1024).flatMap { batch =>
+        val v = DenseMatrix.tabulate(batch.size, width)(
+          (r, c) => batch(r).getSeq[Double](vIdx)(c))
+        val recon = RbmCoreSpec.reconstruct(bc.value, v)
+        batch.iterator.zipWithIndex.map { case (row, r) =>
+          Row.fromSeq(row.toSeq :+ (0 until width).map(recon(r, _)))
+        }
+      }
+    }(Encoders.row(outSchema))
+    Encoding.decode(reconDf, model.layout, df.schema.fieldNames.toSeq)
+  }
+
+  /** Rows sorted by key, doubles and floats as raw bits. */
+  private def bitRows(df: DataFrame): Seq[Seq[Any]] =
+    df.orderBy("k").collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case f: Float => java.lang.Float.floatToRawIntBits(f)
+      case v => v
+    })
+
+  /** 3000 rows: a double column with nulls and NaN, an int column with
+    * nulls, a float column, two string categoricals; some rows all
+    * known, some all missing. */
+  private lazy val mixed: DataFrame = {
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("d", DoubleType),
+      StructField("i", IntegerType), StructField("f", FloatType),
+      StructField("c", StringType), StructField("e", StringType),
+      StructField("other", StringType)))
+    val rng = new scala.util.Random(17)
+    val rows = (0 until 3000).map { k =>
+      val kind = k % 10 // 0: all missing, 1-3: all known, else random holes
+      def miss(p: Double): Boolean = kind == 0 || (kind > 3 && rng.nextDouble() < p)
+      val d: Any = if (miss(0.15)) (if (rng.nextBoolean()) null else Double.NaN)
+        else rng.nextGaussian() * 100
+      val i: Any = if (miss(0.15)) null else rng.nextInt(50)
+      val f: Any = if (miss(0.1)) (if (rng.nextBoolean()) null else Float.NaN)
+        else rng.nextFloat()
+      val c: Any = if (miss(0.2)) null else Seq("a", "b", "c", "d")(rng.nextInt(4))
+      val e: Any = if (miss(0.2)) null else Seq("x", "y")(rng.nextInt(2))
+      Row(k.toLong, d, i, f, c, e, s"o$k")
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema).cache()
+  }
+
+  // fitted with NaN read as null: the layout's min/max use Spark's
+  // ordering, where NaN is the max, and a NaN range would make every
+  // imputed value NaN; transform then sees the NaN cells as missing
+  private lazy val mixedModel = new RbmImputer()
+    .setNumericCols(Seq("d", "i", "f")).setCategoricalCols(Seq("c", "e"))
+    .setKeyCol("k").setMaxEpochs(4).setSeed(5)
+    .fit(Seq("d", "f").foldLeft(mixed)((df, c) =>
+      df.withColumn(c, when(isnan(col(c)), lit(null)).otherwise(col(c)))))
+
+  test("transform equals the former mapPartitions formulation bit for bit") {
+    val got = mixedModel.transform(mixed)
+    val want = rowPathTransform(mixedModel, mixed)
+    assert(got.filter(Seq("d", "i", "f").map(c => col(c).isNull || isnan(col(c)))
+      .reduce(_ || _)).count() === 0)
+    assert(got.schema === want.schema)
+    assert(bitRows(got) === bitRows(want))
+    // and on the customer frame, through the default configuration
+    val model = new RbmImputer().setNumericCols(Seq("c_acctbal"))
+      .setCategoricalCols(Seq("c_mktsegment")).setKeyCol("c_custkey")
+      .setMaxEpochs(3).fit(withMissing)
+    def byKey(df: DataFrame) = bitRows(df.withColumnRenamed("c_custkey", "k"))
+    assert(byKey(model.transform(withMissing)) ===
+      byKey(rowPathTransform(model, withMissing)))
+  }
+
+  test("transform plans no MapPartitions and no DeserializeToObject") {
+    val out = mixedModel.transform(mixed)
+    out.write.format("noop").mode("overwrite").save()
+    def nodes(df: DataFrame): String =
+      df.queryExecution.optimizedPlan.toString + df.queryExecution.executedPlan.toString
+    for (node <- Seq("MapPartitions", "DeserializeToObject"))
+      assert(!nodes(out).contains(node), s"$node in\n${nodes(out)}")
+    // the check can see them: the former Row path planned both
+    val old = nodes(rowPathTransform(mixedModel, mixed))
+    assert(old.contains("MapPartitions") && old.contains("DeserializeToObject"))
+    assert(out.queryExecution.executedPlan.toString.contains("graft_rbm_reconstruct"))
+  }
+
+  test("a __v width other than the model's nVisible throws") {
+    val narrow = new RbmImputerModel("narrow", mixedModel.layout,
+      RbmCore.init(mixedModel.layout.width - 1, RbmCore.Config()), Nil).setKeyCol("k")
+    val e = intercept[Exception](narrow.transform(mixed).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("the model has")), e.toString)
   }
 }
