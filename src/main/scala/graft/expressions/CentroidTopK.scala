@@ -1,5 +1,6 @@
 package graft.expressions
 
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -8,9 +9,10 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
-/** Native top-`nProbe`-nearest-centroids over a literal centroid
+/** Native top-`nProbe`-nearest-centroids over a driver-side centroid
   * matrix — the hot loop of IVF-style cell assignment/probing
-  * (KMeansLloyd.transform/probeCells, KnnImpute.imputeAnn).
+  * (Cosine.ivfProbes for IvfIndex/IvfPq, KMeansLloyd.transform/
+  * probeCells, KnnImpute.imputeAnn, ClusterQuality).
   *
   * Why a custom Expression: the Column composition (an
   * array<struct> of per-centroid distance subtrees, argmin'd or
@@ -24,12 +26,20 @@ import org.apache.spark.sql.types._
   * row into a primitive loop, k·dim flops, zero allocation until the
   * nProbe-sized output).
   *
-  * Arithmetic contract (bit-identical to the Column form it replaces):
-  * per centroid d = Σ_j (q_j − c_j)² accumulated LEFT-TO-RIGHT in
-  * IEEE double (q is the caller's micro-unit integer grid, exact in
-  * double); selection orders by (d, centroid id) — the same total
-  * order as a (d, i) struct sort. Returns `array<struct<d, i>>` of
-  * the nProbe nearest, nearest first; null for a null or
+  * The centroid matrix lives in this one object, never as plan
+  * literals: it ships inside the task binary, which Spark broadcasts
+  * once per stage, so no size gate is needed as nlist grows.
+  * `flatArguments` keeps it out of plan strings (the
+  * [[RbmReconstruct]] precedent), so a plan prints the same at any
+  * nlist.
+  *
+  * Arithmetic contract: per centroid d = Σ_j (q_j − c_j)² accumulated
+  * LEFT-TO-RIGHT in IEEE double over the input converted to double —
+  * `array<bigint>` (the k-means family's micro-unit integer grid,
+  * exact in double) or `array<double>` (IVF's raw vectors); selection
+  * orders by (d, centroid id) — the same total order as a (d, i)
+  * struct sort. Returns `array<struct<d, i>>` of the nProbe nearest,
+  * nearest first; null for a null input, a null element or a
   * wrong-dimension input (a dimension mismatch is a data bug — a
   * silent prefix distance would mis-assign plausibly).
   */
@@ -54,11 +64,19 @@ case class CentroidTopK(child: Expression, centroids: Seq[Seq[Double]],
   }
   @transient private lazy val nP = math.min(nProbe, k)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"graft_centroid_topk requires array<bigint>, got ${dt.simpleString}")
+  @transient private lazy val doubleInput = child.dataType match {
+    case ArrayType(DoubleType, _) => true
+    case _ => false
   }
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case dt => TypeCheckResult.TypeCheckFailure(
+      s"graft_centroid_topk requires array<bigint> or array<double>, got ${dt.simpleString}")
+  }
+
+  // the centroid matrix stays out of plan strings
+  override protected def flatArguments: Iterator[Any] = Iterator(child, nProbe)
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(StructField("d", DoubleType, nullable = false),
@@ -74,7 +92,7 @@ case class CentroidTopK(child: Expression, centroids: Seq[Seq[Double]],
     var j = 0
     while (j < dim) {
       if (q.isNullAt(j)) return null
-      qd(j) = q.getLong(j).toDouble
+      qd(j) = if (doubleInput) q.getDouble(j) else q.getLong(j).toDouble
       j += 1
     }
     val d = new Array[Double](k)
@@ -113,4 +131,12 @@ case class CentroidTopK(child: Expression, centroids: Seq[Seq[Double]],
 
   override protected def withNewChildInternal(newChild: Expression): CentroidTopK =
     copy(child = newChild)
+}
+
+object CentroidTopK {
+  /** The `array<struct<d, i>>` of the `nProbe` centroids nearest to `q`,
+    * as a Column. */
+  def column(q: Column, centroids: Array[Array[Double]], nProbe: Int): Column =
+    GraftColumnBridge.column(CentroidTopK(GraftColumnBridge.expression(q),
+      centroids.map(_.toSeq).toSeq, nProbe))
 }

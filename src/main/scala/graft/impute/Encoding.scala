@@ -61,7 +61,14 @@ object Encoding {
     * order of the value. */
   def fitLayout(df: DataFrame, spec: ImputeSpec): ColumnLayout = {
     val stats: Seq[NumericStats] = if (spec.numeric.isEmpty) Seq.empty else {
-      val aggs = spec.numeric.flatMap(c => Seq(min(col(c)), max(col(c))))
+      // NaN reads as null (float/double only): Spark orders NaN above
+      // every value, so one NaN cell would become the max and make every
+      // imputed value of its column NaN
+      def known(c: String): Column = df.schema(c).dataType match {
+        case DoubleType | FloatType => when(!isnan(col(c)), col(c))
+        case _ => col(c)
+      }
+      val aggs = spec.numeric.flatMap(c => Seq(min(known(c)), max(known(c))))
       val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
       spec.numeric.zipWithIndex.map { case (c, i) =>
         def d(x: Any): Double = x match {

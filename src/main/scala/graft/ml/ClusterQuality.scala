@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** CLUSTERING QUALITY — the simplified (centroid-based) SILHOUETTE:
@@ -31,12 +31,6 @@ import org.apache.spark.sql.functions._
   * rest of the k-means family (the fit isn't one SQL query). */
 object ClusterQuality {
 
-  private def top2(q: Column, centroids: Array[Array[Double]]): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.expressions.CentroidTopK(
-        org.apache.spark.sql.GraftColumnBridge.expression(q),
-        centroids.map(_.toSeq).toSeq, 2))
-
   /** Per-cluster silhouette summary under a fitted model: `(cluster,
     * n, mean_silhouette, min_silhouette (6 dp))` plus an `__all__`
     * row with the global mean. Requires ≥ 2 centroids. */
@@ -44,7 +38,8 @@ object ClusterQuality {
                  model: KMeansLloyd.Model): DataFrame = {
     require(model.centroids.length >= 2,
       "silhouette needs at least 2 clusters")
-    val t2 = top2(KMeansLloyd.quantize(col(vecCol)), model.centroids)
+    val t2 = graft.expressions.CentroidTopK.column(
+      KMeansLloyd.quantize(col(vecCol)), model.centroids, 2)
     val a = sqrt(element_at(t2, 1).getField("d"))
     val b = sqrt(element_at(t2, 2).getField("d"))
     val s = when(greatest(a, b) === 0, lit(0.0))

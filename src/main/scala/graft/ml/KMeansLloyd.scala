@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.expressions.CentroidTopK
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -49,24 +50,9 @@ object KMeansLloyd {
       lit(0L), (acc, v) => acc + v)
   }
 
-  /** The nProbe nearest (d, i) structs via the NATIVE
-    * [[graft.expressions.CentroidTopK]] expression. The Column
-    * composition (per-centroid distance subtrees, or one matrix-form
-    * transform lambda) hits both Catalyst lambda hazards at realistic
-    * cell counts — super-linear analysis/codegen in k, and interpreted
-    * HOF eval with per-element allocations (measured 129 s end-to-end
-    * for the ANN-KNN imputer at k=233; sub-second passes native).
-    * Arithmetic and (d, id) tie order are bit-identical. */
-  private def topK(q: Column, centroids: Array[Array[Double]],
-                   nP: Int): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.expressions.CentroidTopK(
-        org.apache.spark.sql.GraftColumnBridge.expression(q),
-        centroids.map(_.toSeq).toSeq, nP))
-
   /** (cluster, d2) argmin struct over all centroids; ties → lower id. */
   private def nearest(q: Column, centroids: Array[Array[Double]]): Column = {
-    val s = element_at(topK(q, centroids, 1), 1)
+    val s = element_at(CentroidTopK.column(q, centroids, 1), 1)
     struct(s.getField("d").as("d"), s.getField("i").as("i"))
   }
 
@@ -151,10 +137,10 @@ object KMeansLloyd {
     * `array<bigint>` of cell ids, nearest first. */
   def probeCells(vec: Column, model: Model, nProbe: Int): Column =
     org.apache.spark.sql.functions.transform(
-      topK(quantize(vec), model.centroids, nProbe), s => s.getField("i"))
+      CentroidTopK.column(quantize(vec), model.centroids, nProbe), s => s.getField("i"))
 
   /** Nearest cell id only — the assignment-side special case of
     * [[probeCells]]. */
   def nearestCell(vec: Column, model: Model): Column =
-    element_at(topK(quantize(vec), model.centroids, 1), 1).getField("i")
+    element_at(CentroidTopK.column(quantize(vec), model.centroids, 1), 1).getField("i")
 }

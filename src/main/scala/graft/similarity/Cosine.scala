@@ -94,22 +94,6 @@ object Cosine {
     bits.reduce((a, b) => a.bitwiseOR(b))
   }
 
-  /** IVF-style approximate neighbors with MULTI-PROBE: a k-means coarse
-    * quantizer assigns every vector to its nearest centroid cell (the
-    * physical bucketing key at 100 TB); each QUERY vector probes its
-    * `nProbe` nearest cells, so neighbors sitting just across a cell
-    * border — the single-probe recall cliff — are still found. Cell
-    * assignment is a single pass either way, chosen ADAPTIVELY from the
-    * measured centroid size (same philosophy as the dedup small-graph
-    * gate): below `maxPlanCentroidDoubles` the centroids live in the
-    * plan as literals (argmin = array_sort over per-centroid (dist, idx)
-    * structs — zero join); above it they become a ONE-ROW broadcast
-    * centroid-matrix relation cross-joined onto the scan, and the argmin
-    * is the same array arithmetic over the broadcast column — nlist ≈ √n
-    * grows with the corpus, and without the gate a 100× corpus inflates
-    * every task's codegen by nlist × dim literal doubles. Both paths
-    * compute bit-identical probes (same operation order), asserted in
-    * CosineSpec. The only shuffle is the per-cell pair join. */
   /** Coarse-quantizer fit on a bounded sample — shared by the one-shot
     * [[ivfTopK]] and the persisted [[IvfIndex]]: identical parameters
     * produce identical centers (same sample, same seed, same Lloyd
@@ -136,10 +120,16 @@ object Cosine {
     km.fit(fitDf).clusterCenters.map(_.toArray)
   }
 
+  /** IVF-style approximate neighbors with MULTI-PROBE: a k-means coarse
+    * quantizer assigns every vector to its nearest centroid cell (the
+    * physical bucketing key at 100 TB); each QUERY vector probes its
+    * `nProbe` nearest cells, so neighbors sitting just across a cell
+    * border — the single-probe recall cliff — are still found. Cell
+    * assignment is one projection ([[ivfProbes]]). The only shuffle is
+    * the per-cell pair join. */
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
               numCentroids: Int = 0, nProbe: Int = 2,
-              seed: Long = 42L, fitSample: Int = 100000,
-              maxPlanCentroidDoubles: Int = 32768): DataFrame = {
+              seed: Long = 42L, fitSample: Int = 100000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val centers = fitQuantizer(df, vecCol, numCentroids, seed, fitSample)
     // probes come from the RAW vector (k-means was fit on raw vectors);
@@ -147,8 +137,7 @@ object Cosine {
     // per-centroid distances are the dominant per-row cost, and `base`
     // feeds BOTH sides of the cell self-join — materialize it once
     // (same pattern as annScored)
-    val base = ivfProbes(df, idCol, vecCol, centers, nProbe,
-      maxPlanCentroidDoubles).localCheckpoint()
+    val base = ivfProbes(df, idCol, vecCol, centers, nProbe).localCheckpoint()
     // index side: every vector lives in exactly its nearest cell;
     // query side: each vector probes its nProbe nearest cells
     val indexSide = base.select(element_at(col("__probes"), 1).as("__cell"),
@@ -164,50 +153,23 @@ object Cosine {
       .select("a", "b", "score", "rank")
   }
 
-  /** Cell/probe assignment stage of [[ivfTopK]], visible for plan
-    * assertions: returns `(__id, __v unit vector, __probes)` with NO
-    * checkpoint. Picks the physical form from the measured centroid
-    * size — plan literals below the gate, a one-row broadcast
-    * centroid-matrix relation above it. */
+  /** Cell/probe assignment stage of [[ivfTopK]], [[IvfIndex]] and
+    * [[IvfPq]], visible for plan assertions: returns `(__id, __v unit
+    * vector, __probes)` with NO checkpoint. `__probes` is the ids of the
+    * `nProbe` nearest centroids to the RAW vector, nearest first, by
+    * the native [[graft.expressions.CentroidTopK]] — one projection,
+    * no join, centroids out of the plan text at any nlist. It stays
+    * `array<int>` so bucketed tables already on disk keep accepting
+    * [[IvfIndex.merge]] appends. A null vector, a null element or a
+    * wrong-dimension vector gets null probes: it lands in no cell and
+    * probes none. */
   private[similarity] def ivfProbes(df: DataFrame, idCol: String,
-      vecCol: String, centers: Array[Array[Double]], nProbe: Int,
-      maxPlanCentroidDoubles: Int): DataFrame = {
+      vecCol: String, centers: Array[Array[Double]],
+      nProbe: Int): DataFrame = {
     val v = col(vecCol).cast("array<double>")
-    val vv = dot(v, v)
-    val nP = math.min(nProbe, centers.length)
-    val dim = centers.headOption.map(_.length).getOrElse(0)
-    def probesOf(dists: Column): Column =
-      transform(slice(array_sort(dists), 1, nP), s => s.getField("i"))
-    if (centers.length.toLong * dim <= maxPlanCentroidDoubles) {
-      // literal path: squared Euclidean distance to each centroid
-      // (‖c‖² folds to a literal), argmin as a pure projection
-      val dists = array(centers.zipWithIndex.map { case (c, i) =>
-        val cl = array(c.toIndexedSeq.map(lit): _*)
-        val d = vv - lit(2.0) * dot(v, cl) + lit(c.map(x => x * x).sum)
-        struct(d.as("d"), lit(i).as("i"))
-      }.toIndexedSeq: _*)
-      df.select(col(idCol).as("__id"), unitExpr(v).as("__v"),
-        probesOf(dists).as("__probes"))
-    } else {
-      // broadcast path: the whole centroid matrix is ONE row holding an
-      // array<struct<i, c, cc>> — a BroadcastNestedLoopJoin appends the
-      // column to every scan row (no shuffle, no per-task literal
-      // blowup), and the same (dist, idx) argmin runs over it with
-      // higher-order array functions. Identical arithmetic order to the
-      // literal path → identical probes.
-      val spark = df.sparkSession
-      import spark.implicits._
-      val cmat = centers.zipWithIndex
-        .map { case (c, i) => (i, c, c.map(x => x * x).sum) }.toSeq
-        .toDF("i", "c", "cc")
-        .agg(collect_list(struct(col("i"), col("c"), col("cc"))).as("__cmat"))
-      val dists = transform(col("__cmat"), s =>
-        struct((vv - lit(2.0) * dot(v, s.getField("c")) + s.getField("cc"))
-          .as("d"), s.getField("i").as("i")))
-      df.crossJoin(broadcast(cmat))
-        .select(col(idCol).as("__id"), unitExpr(v).as("__v"),
-          probesOf(dists).as("__probes"))
-    }
+    val nearest = graft.expressions.CentroidTopK.column(v, centers, nProbe)
+    df.select(col(idCol).as("__id"), unitExpr(v).as("__v"),
+      transform(nearest, s => s.getField("i").cast("int")).as("__probes"))
   }
 
   /** How many hyperplanes a self-sized LSH code uses: enough bits that

@@ -41,15 +41,12 @@ object IvfIndex {
   def write(df: DataFrame, idCol: String, vecCol: String,
             table: String, path: String, numCentroids: Int = 0,
             seed: Long = 42L, fitSample: Int = 100000,
-            numBuckets: Int = 32,
-            maxPlanCentroidDoubles: Int = 32768): Unit = {
+            numBuckets: Int = 32): Unit = {
     val centers = Cosine.fitQuantizer(df, vecCol, numCentroids, seed, fitSample)
     writeCentroids(df.sparkSession, centers, path)
     // nProbe = 1 ⇒ __probes(1) is exactly the nearest cell — the same
-    // assignment arithmetic (and adaptive literal/broadcast gate) as
-    // the one-shot path's index side
-    val assigned = Cosine.ivfProbes(df, idCol, vecCol, centers,
-        nProbe = 1, maxPlanCentroidDoubles)
+    // assignment arithmetic as the one-shot path's index side
+    val assigned = Cosine.ivfProbes(df, idCol, vecCol, centers, nProbe = 1)
       .select(element_at(col("__probes"), 1).as("__cell"),
         col("__id"), col("__v"))
     TableSink.writeBucketed(assigned, table, s"$path/vectors",
@@ -97,12 +94,11 @@ object IvfIndex {
     * LexicalIndex.merge — re-adding an id duplicates it). */
   def merge(spark: SparkSession, table: String, path: String,
             newVectors: DataFrame, idCol: String, vecCol: String,
-            numBuckets: Int = 32,
-            maxPlanCentroidDoubles: Int = 32768): Unit = {
+            numBuckets: Int = 32): Unit = {
     if (newVectors.isEmpty) return
     val centers = readCentroids(spark, path)
     val assigned = Cosine.ivfProbes(newVectors, idCol, vecCol, centers,
-        nProbe = 1, maxPlanCentroidDoubles)
+        nProbe = 1)
       .select(element_at(col("__probes"), 1).as("__cell"),
         col("__id"), col("__v"))
     TableSink.appendBucketed(assigned, table, Seq("__cell"), numBuckets)
@@ -115,12 +111,10 @@ object IvfIndex {
     * in place (zero Exchange on the index side). */
   def topK(spark: SparkSession, table: String, path: String,
            queries: DataFrame, idCol: String, vecCol: String, k: Int,
-           nProbe: Int = 2,
-           maxPlanCentroidDoubles: Int = 32768): DataFrame = {
+           nProbe: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val centers = readCentroids(spark, path)
-    val querySide = Cosine.ivfProbes(queries, idCol, vecCol, centers,
-        nProbe, maxPlanCentroidDoubles)
+    val querySide = Cosine.ivfProbes(queries, idCol, vecCol, centers, nProbe)
       .select(col("__id").as("a"), col("__v").as("__va"),
         explode(col("__probes")).as("__qcell"))
     val indexSide = spark.table(table)

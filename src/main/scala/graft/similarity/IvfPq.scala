@@ -39,16 +39,14 @@ object IvfPq {
             table: String, path: String, numCentroids: Int = 0,
             m: Int = 8, ksub: Int = 16, pqIters: Int = 2,
             seed: Long = 42L, fitSample: Int = 100000,
-            numBuckets: Int = 32,
-            maxPlanCentroidDoubles: Int = 32768): ProductQuantize.Codebooks = {
+            numBuckets: Int = 32): ProductQuantize.Codebooks = {
     val spark = df.sparkSession
     import spark.implicits._
     val centers = Cosine.fitQuantizer(df, vecCol, numCentroids, seed, fitSample)
     IvfIndex.writeCentroids(spark, centers, path)
     // cell + unit vector (nProbe=1 ⇒ exactly the nearest cell, the
     // IvfIndex assignment); PQ codebooks fit on the same unit vectors
-    val assigned = Cosine.ivfProbes(df, idCol, vecCol, centers,
-        nProbe = 1, maxPlanCentroidDoubles)
+    val assigned = Cosine.ivfProbes(df, idCol, vecCol, centers, nProbe = 1)
       .select(element_at(col("__probes"), 1).as("__cell"),
         col("__id"), col("__v"))
       .localCheckpoint()
@@ -58,15 +56,9 @@ object IvfPq {
       book.zipWithIndex.map { case (c, ci) => (j, ci, c.toSeq) }
     }.toSeq.toDF("j", "c", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    // codes materialize before the join+write (ProductQuantize.adcTopK
-    // precedent): inlining the m × ksub argmin into the write plan
-    // next to the probe expressions pushes generated code past the
-    // 64 KB method limit — interpreted fallback on the whole corpus
-    val codes = ProductQuantize.encode(assigned, "__id", "__v", cb)
-      .localCheckpoint()
     TableSink.writeBucketed(
-      assigned.join(codes, "__id")
-        .select(col("__cell"), col("__id"), col("__codes"), col("__v")),
+      assigned.select(col("__cell"), col("__id"),
+        ProductQuantize.codes(col("__v"), cb).as("__codes"), col("__v")),
       table, s"$path/vectors", Seq("__cell"), numBuckets)
     cb
   }
@@ -95,8 +87,7 @@ object IvfPq {
     * ADC over codes only → exact-cosine re-rank of the shortlist. */
   def topK(spark: SparkSession, table: String, path: String,
            queries: DataFrame, idCol: String, vecCol: String, dim: Int,
-           k: Int, nProbe: Int = 2, shortlist: Int = 0,
-           maxPlanCentroidDoubles: Int = 32768): DataFrame = {
+           k: Int, nProbe: Int = 2, shortlist: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     require(k >= 1)
@@ -111,8 +102,7 @@ object IvfPq {
     // no checkpoint: the query batch is small by contract and the
     // probe projection is cheap — re-deriving it for the three
     // consumers costs less than a materialization job
-    val qSide = Cosine.ivfProbes(queries, idCol, vecCol, centers,
-        nProbe, maxPlanCentroidDoubles)
+    val qSide = Cosine.ivfProbes(queries, idCol, vecCol, centers, nProbe)
       .select(col("__id").as("a"), col("__v").as("__va"), col("__probes"))
     val qGrid = qSide
       .select(col("a"), graft.ml.KMeansLloyd.quantize(col("__va")).as("qv"))

@@ -148,14 +148,17 @@ object ProductQuantize {
     * time. Arithmetic and (d, id) tie order are bit-identical
     * (PqEncode scaladoc; ProductQuantizeSpec pins the codes). */
   def encode(df: DataFrame, idCol: String, vecCol: String,
-             cb: Codebooks): DataFrame = {
-    val grid = KMeansLloyd.quantize(col(vecCol))
-    val codes = org.apache.spark.sql.GraftColumnBridge.column(
+             cb: Codebooks): DataFrame =
+    df.select(col(idCol).as("__id"), codes(col(vecCol), cb).as("__codes"))
+
+  /** The `array<bigint>` PQ code column of [[encode]], for callers that
+    * project codes next to other columns. */
+  private[similarity] def codes(vec: Column, cb: Codebooks): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
       graft.expressions.PqEncode(
-        org.apache.spark.sql.GraftColumnBridge.expression(grid),
+        org.apache.spark.sql.GraftColumnBridge.expression(
+          KMeansLloyd.quantize(vec)),
         cb.gridCentroids.map(_.map(_.map(_.toDouble).toSeq).toSeq).toSeq))
-    df.select(col(idCol).as("__id"), codes.as("__codes"))
-  }
 
   /** ADC top-k with exact re-rank. Output `(query_id, id, d2, rank)`:
     * d2 is the EXACT squared L2 distance on the micro-unit grid

@@ -118,14 +118,34 @@ class RbmImputerSpec extends SparkSpec {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema).cache()
   }
 
-  // fitted with NaN read as null: the layout's min/max use Spark's
-  // ordering, where NaN is the max, and a NaN range would make every
-  // imputed value NaN; transform then sees the NaN cells as missing
   private lazy val mixedModel = new RbmImputer()
     .setNumericCols(Seq("d", "i", "f")).setCategoricalCols(Seq("c", "e"))
     .setKeyCol("k").setMaxEpochs(4).setSeed(5)
-    .fit(Seq("d", "f").foldLeft(mixed)((df, c) =>
-      df.withColumn(c, when(isnan(col(c)), lit(null)).otherwise(col(c)))))
+    .fit(mixed)
+
+  test("a NaN cell in a double target column gets finite imputed values in range") {
+    // the layout's min/max must read NaN as null: in Spark's ordering
+    // NaN is the max, and a NaN range makes every imputed value NaN
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("d", DoubleType), StructField("c", StringType)))
+    val rng = new scala.util.Random(3)
+    val rows = (0 until 400).map { k =>
+      val d: Any = if (k == 7) Double.NaN else if (k % 9 == 0) null
+        else rng.nextGaussian() * 10 + 50
+      Row(k.toLong, d, Seq("a", "b")(k % 2))
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val out = new RbmImputer().setNumericCols(Seq("d"))
+      .setCategoricalCols(Seq("c")).setKeyCol("k").setMaxEpochs(3).setSeed(1)
+      .fit(df).transform(df)
+    val range = df.filter(!isnan(col("d"))).agg(min("d"), max("d")).head()
+    val (mn, mx) = (range.getDouble(0), range.getDouble(1))
+    val holes = df.filter(col("d").isNull || isnan(col("d"))).select("k")
+    val filled = out.join(holes, "k").select("d").collect().map(_.getDouble(0))
+    assert(filled.length === 46)
+    assert(filled.forall(v => !v.isNaN && v >= mn && v <= mx),
+      s"imputed ${filled.mkString(", ")} outside [$mn, $mx]")
+  }
 
   test("transform equals the former mapPartitions formulation bit for bit") {
     val got = mixedModel.transform(mixed)

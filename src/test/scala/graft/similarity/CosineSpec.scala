@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class CosineSpec extends SparkSpec {
@@ -61,39 +62,52 @@ class CosineSpec extends SparkSpec {
     assert(deduped.count() === 400, s"expected 400, got ${deduped.count()}")
   }
 
-  test("IVF broadcast-centroid path matches the literal path exactly") {
-    // the adaptive gate (maxPlanCentroidDoubles) switches centroid
-    // storage from plan literals to a one-row broadcast relation as
-    // nlist × dim grows with the corpus — both paths must produce the
-    // SAME rows (the arithmetic order is identical by construction)
-    val sample = emb.filter(col("vec_id") < 300)
-    val literal = Cosine.ivfTopK(sample, "vec_id", "embedding", k = 3,
-      numCentroids = 8, maxPlanCentroidDoubles = Int.MaxValue)
-    val bcast = Cosine.ivfTopK(sample, "vec_id", "embedding", k = 3,
-      numCentroids = 8, maxPlanCentroidDoubles = 0)
-    assert(literal.exceptAll(bcast).isEmpty && bcast.exceptAll(literal).isEmpty,
-      "broadcast-centroid IVF diverged from the literal-centroid path")
-    // plan-shape check on the probe stage itself (ivfTopK checkpoints
-    // it, which would hide the join): above the gate the centroid
-    // matrix arrives via a broadcast join and the plan text stays
-    // small no matter how large nlist grows; below it the literals are
-    // inlined and no join exists
-    val centers = Array.tabulate(8)(i =>
-      Array.tabulate(64)(d => math.sin(i * 37.0 + d)))
-    val bPlan = Cosine.ivfProbes(sample, "vec_id", "embedding", centers,
-      nProbe = 2, maxPlanCentroidDoubles = 0)
-      .queryExecution.executedPlan.toString
-    assert(bPlan.contains("BroadcastNestedLoopJoin"),
-      "forced-broadcast IVF probe plan shows no broadcast join")
-    val lPlan = Cosine.ivfProbes(sample, "vec_id", "embedding", centers,
-      nProbe = 2, maxPlanCentroidDoubles = Int.MaxValue)
-      .queryExecution.executedPlan.toString
-    assert(!lPlan.contains("Join"), "literal IVF probe plan grew a join")
-    // the broadcast plan must be free of the per-centroid literal
-    // blowup: at 8×64 the literal plan inlines ≥512 doubles, the
-    // broadcast one carries none of them
-    assert(bPlan.length < lPlan.length,
-      s"broadcast plan (${bPlan.length} chars) not smaller than literal (${lPlan.length})")
+  /** The former literal probe composition, kept as the reference: one
+    * `dot` subtree per centroid (‖c‖² folded to a literal), argmin by
+    * `array_sort` over `(d, i)` structs. */
+  private def literalProbes(df: DataFrame, centers: Array[Array[Double]],
+                            nProbe: Int): DataFrame = {
+    val v = col("embedding").cast("array<double>")
+    val vv = Cosine.dot(v, v)
+    val dists = array(centers.zipWithIndex.map { case (c, i) =>
+      val cl = array(c.toIndexedSeq.map(lit): _*)
+      val d = vv - lit(2.0) * Cosine.dot(v, cl) + lit(c.map(x => x * x).sum)
+      struct(d.as("d"), lit(i).as("i"))
+    }.toIndexedSeq: _*)
+    df.select(col("vec_id").as("__id"),
+      transform(slice(array_sort(dists), 1, math.min(nProbe, centers.length)),
+        s => s.getField("i")).as("__probes"))
+  }
+
+  test("IVF probes equal the literal composition; join-free at any nlist") {
+    val sample = emb.filter(col("vec_id") < 300).localCheckpoint()
+    // nlist 8 from the real quantizer, and 520 × 64 = 33,280 doubles,
+    // past the 32,768-double plan-literal gate the probe path once had
+    val fitted = Cosine.fitQuantizer(sample, "embedding", 8, 42L, 100000)
+    val wide = Array.tabulate(520)(i =>
+      Array.tabulate(64)(d => math.sin(i * 37.0 + d * 1.3) * 0.2))
+    def probePlan(centers: Array[Array[Double]]): String = {
+      val probes = Cosine.ivfProbes(sample, "vec_id", "embedding", centers,
+        nProbe = 2)
+      probes.write.format("noop").mode("overwrite").save()
+      probes.queryExecution.executedPlan.toString
+    }
+    for (centers <- Seq(fitted, wide); nProbe <- Seq(1, 2)) {
+      val got = Cosine.ivfProbes(sample, "vec_id", "embedding", centers, nProbe)
+        .select("__id", "__probes")
+      val want = literalProbes(sample, centers, nProbe)
+      assert(got.schema("__probes").dataType === want.schema("__probes").dataType)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"probes diverged from the literal composition at nlist ${centers.length}")
+    }
+    val small = probePlan(fitted)
+    val large = probePlan(wide)
+    for (plan <- Seq(small, large))
+      assert(!plan.contains("Join"), s"IVF probe plan grew a join:\n$plan")
+    // no centroid enters the plan text: 65× the centroids, same plan
+    // (up to expression-id digits)
+    assert(math.abs(large.length - small.length) < 32,
+      s"probe plan ${small.length} chars at nlist 8, ${large.length} at 520")
   }
 
   test("measured recall/cost knee holds at sf0.01 (curve in SCALING.md)") {

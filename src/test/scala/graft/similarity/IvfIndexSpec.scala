@@ -38,7 +38,7 @@ class IvfIndexSpec extends SparkSpec {
     // the SAME (frozen) centroids: assign the union directly and diff
     val centers = IvfIndex.readCentroids(spark, s"$tmp/idx_incr")
     val expected = Cosine.ivfProbes(embs, "vec_id", "embedding", centers,
-        nProbe = 1, maxPlanCentroidDoubles = 32768)
+        nProbe = 1)
       .select(org.apache.spark.sql.functions.element_at(
         col("__probes"), 1).as("__cell"), col("__id"), col("__v"))
     val merged = spark.table("ivf_incr_vectors")
@@ -59,6 +59,32 @@ class IvfIndexSpec extends SparkSpec {
         k = 5, nProbe = 8)
       .filter(col("b").isin(newIds.toSeq.map(Long.box): _*)).count()
     assert(asNeighbors > 0, "no merged-in vector ever surfaced as a neighbor")
+  }
+
+  test("a null or wrong-dimension embedding is neither indexed in a cell nor served") {
+    // such a row has null probes: a null __cell on disk, no probed cell
+    import spark.implicits._
+    val embs = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding")).localCheckpoint()
+    val bad = Seq((900001L, null: Seq[Float]), (900002L, Seq(1.0f, 2.0f)))
+      .toDF("vec_id", "embedding")
+    val badIds = Seq(900001L, 900002L)
+    IvfIndex.write(embs, "vec_id", "embedding", table = "ivf_null_vectors",
+      path = s"$tmp/idx_null", numCentroids = 4, seed = 42L, numBuckets = 2)
+    IvfIndex.merge(spark, "ivf_null_vectors", s"$tmp/idx_null",
+      bad, "vec_id", "embedding", numBuckets = 2)
+    val cells = spark.table("ivf_null_vectors")
+      .filter(col("__id").isin(badIds: _*)).select("__cell").collect()
+    assert(cells.length === 2 && cells.forall(_.isNullAt(0)),
+      s"bad rows got cells ${cells.mkString(", ")}")
+    // every cell probed: a bad row is never a neighbor, and as a query
+    // it probes nothing
+    val served = IvfIndex.topK(spark, "ivf_null_vectors", s"$tmp/idx_null",
+        embs.unionByName(bad), "vec_id", "embedding", k = 600, nProbe = 4)
+      .localCheckpoint()
+    assert(served.count() > 0)
+    assert(served.filter(col("a").isin(badIds: _*) ||
+      col("b").isin(badIds: _*) || col("score").isNull).isEmpty)
   }
 
   test("index side of the serving join is bucketed — no Exchange on it") {
