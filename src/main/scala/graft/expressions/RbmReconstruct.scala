@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * interpreted `CodegenFallback` would have to materialise the input
   * row to call `eval`).
   *
-  * The weights ship once per executor as a broadcast and unpack into
-  * row-major arrays on first use; they are never inlined into the plan
+  * The weights ship once per executor as a broadcast, read in their
+  * row-major layout as they arrive; they are never inlined into the plan
   * (at the `maxCardinality` cap, 10⁴ visible × 16 hidden units, that
   * would be 1.3 MB per task).
   *
@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 case class RbmReconstruct(child: Expression, weights: Broadcast[RbmWeights])
     extends UnaryExpression {
 
-  @transient private lazy val flat = RbmCore.Flat(weights.value)
+  @transient private lazy val wts = weights.value
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
@@ -49,7 +49,7 @@ case class RbmReconstruct(child: Expression, weights: Broadcast[RbmWeights])
   override protected def flatArguments: Iterator[Any] = Iterator(child)
 
   def reconstruct(a: ArrayData): ArrayData = {
-    val nv = flat.nv
+    val nv = wts.nVisible
     if (a.numElements() != nv)
       throw new IllegalArgumentException(
         s"graft_rbm_reconstruct: input vector has ${a.numElements()} " +
@@ -60,7 +60,7 @@ case class RbmReconstruct(child: Expression, weights: Broadcast[RbmWeights])
       if (!a.isNullAt(i)) v(i) = a.getDouble(i)
       i += 1
     }
-    UnsafeArrayData.fromPrimitiveArray(RbmCore.reconstruct(flat, v))
+    UnsafeArrayData.fromPrimitiveArray(RbmCore.reconstruct(wts, v))
   }
 
   override def nullSafeEval(input: Any): Any = reconstruct(input.asInstanceOf[ArrayData])

@@ -72,7 +72,6 @@ object SegmentedImpute {
   def rbmBySegment(df: DataFrame, valueCol: String, segmentCol: String,
                    keyCol: String, cfg: RbmCore.Config = RbmCore.Config(),
                    maxGroupRows: Int = 100000): DataFrame = {
-    import breeze.linalg.DenseMatrix
     val spark = df.sparkSession
     val schema = df.schema
     val valueIdx = schema.fieldIndex(valueCol)
@@ -119,18 +118,12 @@ object SegmentedImpute {
             r.isNullAt(valueIdx) || num(r, valueIdx).isNaN
           def imputeGroup(rows: Seq[Row]): Iterator[Row] = {
             val train = rows.take(maxGroupRows)
-            val m = train.size
-            val x = DenseMatrix.zeros[Double](m, 1)
-            val known = DenseMatrix.fill[Boolean](m, 1)(true)
-            var i = 0
-            train.foreach { r =>
-              if (isMissing(r)) {
-                known(i, 0) = false
-                x(i, 0) = hashNoiseLocal(numKey(r, keyIdx), 9001)
-              } else x(i, 0) = (num(r, valueIdx) - mn) / range
-              i += 1
-            }
-            val wts = RbmCore.Flat(RbmCore.fit(x, known, cfg).weights)
+            val x = train.map { r =>
+              Array(if (isMissing(r)) hashNoiseLocal(numKey(r, keyIdx), 9001)
+                else (num(r, valueIdx) - mn) / range)
+            }.toArray
+            val known = train.map(r => Array(!isMissing(r))).toArray
+            val wts = RbmCore.fit(x, known, 1, cfg).weights
             rows.iterator.map { r =>
               if (!isMissing(r)) r
               else {

@@ -1,6 +1,5 @@
 package graft.ml
 
-import breeze.linalg.DenseMatrix
 import graft.impute.{ColumnLayout, Encoding, ImputeSpec}
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
@@ -23,17 +22,20 @@ import org.apache.spark.sql.types.StructType
   *    top-K distinct) + one bounded `collect` of an encoded sample
   *    (`sampleLimit` rows — the RBM is a few-thousand-parameter model;
   *    a bounded uniform sample is statistically faithful at any SF),
-  *    then driver-local CD-1 training on RbmCore's primitive fma
-  *    kernels. Nothing quadratic in cluster size; sample never exceeds
-  *    `sampleLimit` rows regardless of input scale.
+  *    then driver-local CD-1 training ([[RbmCore.fit]]). Nothing
+  *    quadratic in cluster size; sample never exceeds `sampleLimit`
+  *    rows regardless of input scale. `backend = "distributed"`
+  *    instead trains on every row, one gradient pass per epoch
+  *    ([[RbmCore.fitDistributed]]).
   *  - `transform`: one projection chain inside whole-stage codegen —
   *    encode, then the native [[graft.expressions.RbmReconstruct]]
   *    (weights broadcast once) on rows with a missing target cell,
   *    then decode. A row with every target cell known skips the kernel.
   *    No shuffle and no external-Row conversion.
   *
-  * Both paths reproduce the former Breeze formulation bit for bit
-  * under RbmCore's parity contract (fma chains in `Java11BLAS` order).
+  * Both trainers and the reconstruct run on RbmCore's fma kernels,
+  * which reproduce the former Breeze formulation bit for bit (fma
+  * chains in `Java11BLAS` order; RbmCoreSpec pins it).
   */
 class RbmImputer(override val uid: String) extends Estimator[RbmImputerModel]
     with DefaultParamsWritable {
@@ -59,8 +61,8 @@ class RbmImputer(override val uid: String) extends Estimator[RbmImputerModel]
   final val maxCardinality = new IntParam(this, "maxCardinality",
     "one-hot width cap per categorical column", ParamValidators.gt(0))
   final val backend = new Param[String](this, "backend",
-    "training backend: 'local' (bounded-sample, driver Breeze) or " +
-      "'distributed' (treeAggregate data-parallel gradients)",
+    "training backend: 'local' (bounded-sample, driver-side) or " +
+      "'distributed' (treeReduce data-parallel gradients)",
     ParamValidators.inArray(Array("local", "distributed")))
 
   setDefault(numericCols -> Array.empty[String], categoricalCols -> Array.empty[String],
@@ -90,12 +92,13 @@ class RbmImputer(override val uid: String) extends Estimator[RbmImputerModel]
     dropout = $(dropoutFraction), maxEpochs = $(maxEpochs), adagrad = $(adagrad),
     seed = $(seed))
 
-  /** Layout fit + bounded-sample collect of encoded training matrices
-    * (shared by plain fit and the tuner). count() is one cheap pass;
-    * the sample fraction is padded 10% then truncated so the collect
-    * stays <= sampleLimit rows at any SF. */
+  /** Layout fit + bounded-sample collect of the encoded training rows
+    * and their expanded known-cell masks (shared by plain fit and the
+    * tuner). count() is one cheap pass; the sample fraction is padded
+    * 10% then truncated so the collect stays <= sampleLimit rows at any
+    * SF. */
   private[ml] def collectTrainingData(df: org.apache.spark.sql.DataFrame)
-      : (ColumnLayout, DenseMatrix[Double], DenseMatrix[Boolean]) = {
+      : (ColumnLayout, Array[Array[Double]], Array[Array[Boolean]]) = {
     val layout = Encoding.fitLayout(df, spec)
     val encoded = Encoding.encode(df, layout, $(keyCol))
       .select(Encoding.VCol, Encoding.KnownCol)
@@ -106,18 +109,8 @@ class RbmImputer(override val uid: String) extends Estimator[RbmImputerModel]
       else encoded.sample(withReplacement = false,
         math.min(1.0, lim.toDouble * 1.1 / n), $(seed)).limit(lim)
     val rows = sampled.collect()
-    val m = rows.length
-    val x = DenseMatrix.zeros[Double](m, layout.width)
-    val known = DenseMatrix.fill[Boolean](m, layout.width)(true)
-    var i = 0
-    while (i < m) {
-      val v = rows(i).getSeq[Double](0)
-      val ku = Encoding.expandKnown(layout, rows(i).getSeq[Boolean](1).toIndexedSeq)
-      var j = 0
-      while (j < layout.width) { x(i, j) = v(j); known(i, j) = ku(j); j += 1 }
-      i += 1
-    }
-    (layout, x, known)
+    (layout, rows.map(_.getSeq[Double](0).toArray),
+      rows.map(r => Encoding.expandKnown(layout, r.getSeq[Boolean](1).toIndexedSeq)))
   }
 
   private[ml] def buildModel(layout: ColumnLayout,
@@ -136,7 +129,7 @@ class RbmImputer(override val uid: String) extends Estimator[RbmImputerModel]
       buildModel(layout, result)
     } else {
       val (layout, x, known) = collectTrainingData(df)
-      buildModel(layout, RbmCore.fit(x, known, rbmConfig))
+      buildModel(layout, RbmCore.fit(x, known, layout.width, rbmConfig))
     }
   }
 
@@ -194,20 +187,26 @@ object RbmImputerModel extends MLReadable[RbmImputerModel] {
       w: Seq[Double], vBias: Seq[Double], hBias: Seq[Double],
       epochErrors: Seq[Double])
 
-  private def modelData(m: RbmImputerModel): ModelData = ModelData(
-    uid = m.uid,
-    keyColName = m.getOrDefault(m.keyCol),
-    numericNames = m.layout.numerics.map(_.name),
-    numericMins = m.layout.numerics.map(_.min),
-    numericMaxs = m.layout.numerics.map(_.max),
-    catNames = m.layout.categoricals.map(_.name),
-    catValues = m.layout.categoricals.map(_.values),
-    nVisible = m.weights.nVisible,
-    nHidden = m.weights.nHidden,
-    w = m.weights.w.toArray.toSeq, // column-major
-    vBias = m.weights.vBias.toArray.toSeq,
-    hBias = m.weights.hBias.toArray.toSeq,
-    epochErrors = m.epochErrors)
+  /** On disk `w` stays column-major — W(i, j) at `j * nVisible + i` —
+    * so models saved before the weights went row-major still load. */
+  private def modelData(m: RbmImputerModel): ModelData = {
+    val wts = m.weights
+    val (nv, nh) = (wts.nVisible, wts.nHidden)
+    ModelData(
+      uid = m.uid,
+      keyColName = m.getOrDefault(m.keyCol),
+      numericNames = m.layout.numerics.map(_.name),
+      numericMins = m.layout.numerics.map(_.min),
+      numericMaxs = m.layout.numerics.map(_.max),
+      catNames = m.layout.categoricals.map(_.name),
+      catValues = m.layout.categoricals.map(_.values),
+      nVisible = nv,
+      nHidden = nh,
+      w = Seq.tabulate(nv * nh)(k => wts.w((k % nv) * nh + k / nv)),
+      vBias = wts.vBias.toSeq,
+      hBias = wts.hBias.toSeq,
+      epochErrors = m.epochErrors)
+  }
 
   /** Rebuilds a saved model, refusing one whose shapes disagree — such
     * a model would otherwise load and fail only inside a transform task. */
@@ -224,10 +223,11 @@ object RbmImputerModel extends MLReadable[RbmImputerModel] {
     shape("the vBias length", d.vBias.length, d.nVisible, "nVisible")
     shape("the hBias length", d.hBias.length, d.nHidden, "nHidden")
     shape("the weight count", d.w.length, d.nVisible * d.nHidden, "nVisible × nHidden")
-    val weights = RbmWeights(
-      new breeze.linalg.DenseMatrix(d.nVisible, d.nHidden, d.w.toArray),
-      breeze.linalg.DenseVector(d.vBias.toArray),
-      breeze.linalg.DenseVector(d.hBias.toArray))
+    val (nv, nh) = (d.nVisible, d.nHidden)
+    val colMajor = d.w.toArray
+    val weights = new RbmWeights(nv, nh,
+      Array.tabulate(nv * nh)(k => colMajor((k % nh) * nv + k / nh)),
+      d.vBias.toArray, d.hBias.toArray)
     new RbmImputerModel(d.uid, layout, weights, d.epochErrors)
       .setKeyCol(d.keyColName)
   }

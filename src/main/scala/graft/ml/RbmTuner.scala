@@ -7,11 +7,11 @@ import org.apache.spark.sql.Dataset
   * cell reconstruction MSE (RbmCore's early-stopping metric), refit the
   * winner at full epochs.
   *
-  * The encoded training matrices are collected ONCE and shared across
-  * all candidate fits — tuning cost is pure driver-local Breeze math,
-  * no extra cluster passes beyond the single sample collect. Candidates
-  * are embarrassingly parallel; sequential is fine at model sizes where
-  * one fit is sub-second.
+  * The encoded training rows are collected ONCE and shared across all
+  * candidate fits (`RbmCore.fit` only reads them) — tuning cost is pure
+  * driver-local kernel math, no extra cluster passes beyond the single
+  * sample collect. Candidates are embarrassingly parallel; sequential is
+  * fine at model sizes where one fit is sub-second.
   */
 object RbmTuner {
 
@@ -40,13 +40,13 @@ object RbmTuner {
       val cfg = base.copy(nHidden = c.nHidden, learnRate = c.learnRate,
         batchSize = c.batchSize, dropout = c.dropout, maxEpochs = tuneEpochs,
         patience = tuneEpochs)
-      val r = RbmCore.fit(x.copy, known.copy, cfg)
+      val r = RbmCore.fit(x, known, layout.width, cfg)
       c -> (if (r.epochErrors.nonEmpty) r.epochErrors.min else Double.MaxValue)
     }
     val best = scores.minBy(_._2)._1
     val cfg = base.copy(nHidden = best.nHidden, learnRate = best.learnRate,
       batchSize = best.batchSize, dropout = best.dropout)
-    val result = RbmCore.fit(x, known, cfg)
+    val result = RbmCore.fit(x, known, layout.width, cfg)
     TuneReport(best, scores, imputer.buildModel(layout, result))
   }
 }

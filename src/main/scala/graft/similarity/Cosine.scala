@@ -161,8 +161,8 @@ object Cosine {
     * no join, centroids out of the plan text at any nlist. It stays
     * `array<int>` so bucketed tables already on disk keep accepting
     * [[IvfIndex.merge]] appends. A null vector, a null element or a
-    * wrong-dimension vector gets null probes: it lands in no cell and
-    * probes none. */
+    * wrong-dimension vector gets null probes: it probes no cell, and
+    * [[IvfIndex.assign]] refuses to store it. */
   private[similarity] def ivfProbes(df: DataFrame, idCol: String,
       vecCol: String, centers: Array[Array[Double]],
       nProbe: Int): DataFrame = {

@@ -44,14 +44,25 @@ object IvfIndex {
             numBuckets: Int = 32): Unit = {
     val centers = Cosine.fitQuantizer(df, vecCol, numCentroids, seed, fitSample)
     writeCentroids(df.sparkSession, centers, path)
-    // nProbe = 1 ⇒ __probes(1) is exactly the nearest cell — the same
-    // assignment arithmetic as the one-shot path's index side
-    val assigned = Cosine.ivfProbes(df, idCol, vecCol, centers, nProbe = 1)
-      .select(element_at(col("__probes"), 1).as("__cell"),
-        col("__id"), col("__v"))
-    TableSink.writeBucketed(assigned, table, s"$path/vectors",
-      Seq("__cell"), numBuckets)
+    TableSink.writeBucketed(assign(df, idCol, vecCol, centers), table,
+      s"$path/vectors", Seq("__cell"), numBuckets)
   }
+
+  /** `(__cell, __id, __v unit vector)`: every row in its nearest cell,
+    * as [[write]], [[merge]] and [[IvfPq.write]] store it. nProbe = 1 ⇒
+    * `__probes(1)` is exactly the nearest cell — the same assignment
+    * arithmetic as the one-shot path's index side. A row whose
+    * embedding is null, holds a null or has the wrong dimension has no
+    * cell, and no read would ever serve it: it fails the build with
+    * `raise_error`, naming its `__id`, inside the same projection. */
+  private[similarity] def assign(df: DataFrame, idCol: String, vecCol: String,
+                                 centers: Array[Array[Double]]): DataFrame =
+    Cosine.ivfProbes(df, idCol, vecCol, centers, nProbe = 1)
+      .select(coalesce(element_at(col("__probes"), 1),
+          raise_error(concat(lit("IVF index: the embedding of __id "),
+            col("__id").cast("string"),
+            lit(" is null, holds a null or has the wrong dimension")))).as("__cell"),
+        col("__id"), col("__v"))
 
   /** Schema of the `centroids` side table as [[write]] leaves it. */
   val CentroidsSchema: StructType = StructType(Seq(
@@ -96,12 +107,8 @@ object IvfIndex {
             newVectors: DataFrame, idCol: String, vecCol: String,
             numBuckets: Int = 32): Unit = {
     if (newVectors.isEmpty) return
-    val centers = readCentroids(spark, path)
-    val assigned = Cosine.ivfProbes(newVectors, idCol, vecCol, centers,
-        nProbe = 1)
-      .select(element_at(col("__probes"), 1).as("__cell"),
-        col("__id"), col("__v"))
-    TableSink.appendBucketed(assigned, table, Seq("__cell"), numBuckets)
+    TableSink.appendBucketed(assign(newVectors, idCol, vecCol,
+      readCentroids(spark, path)), table, Seq("__cell"), numBuckets)
     spark.catalog.refreshTable(table)
   }
 

@@ -44,12 +44,8 @@ object IvfPq {
     import spark.implicits._
     val centers = Cosine.fitQuantizer(df, vecCol, numCentroids, seed, fitSample)
     IvfIndex.writeCentroids(spark, centers, path)
-    // cell + unit vector (nProbe=1 ⇒ exactly the nearest cell, the
-    // IvfIndex assignment); PQ codebooks fit on the same unit vectors
-    val assigned = Cosine.ivfProbes(df, idCol, vecCol, centers, nProbe = 1)
-      .select(element_at(col("__probes"), 1).as("__cell"),
-        col("__id"), col("__v"))
-      .localCheckpoint()
+    // the IvfIndex assignment; PQ codebooks fit on the same unit vectors
+    val assigned = IvfIndex.assign(df, idCol, vecCol, centers).localCheckpoint()
     val cb = ProductQuantize.fit(assigned, "__id", "__v", dim,
       m, ksub, pqIters, fitSample)
     cb.centroids.zipWithIndex.flatMap { case (book, j) =>

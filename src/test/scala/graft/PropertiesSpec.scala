@@ -1,6 +1,5 @@
 package graft
 
-import breeze.linalg.{DenseMatrix, DenseVector}
 import graft.impute.{CategoryInfo, ColumnLayout, NumericStats}
 import graft.ml.{RbmCore, RbmWeights}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -52,8 +51,7 @@ class PropertiesSpec extends AnyFunSuite {
       wts <- Gen.listOfN(nv * nh, Gen.chooseNum(-3.0, 3.0))
     } yield (n, nv, nh, cells, wts)
     check(Prop.forAll(gen) { case (n, nv, nh, cells, wts) =>
-      val w = RbmCore.Flat(RbmWeights(new DenseMatrix(nv, nh, wts.toArray),
-        DenseVector.zeros[Double](nv), DenseVector.zeros[Double](nh)))
+      val w = new RbmWeights(nv, nh, wts.toArray, new Array[Double](nv), new Array[Double](nh))
       val out = new Array[Double](n * nv)
       RbmCore.reconstruct(w, cells.toArray, n, new Array[Double](n * nh), out)
       out.forall(x => x > 0.0 && x < 1.0)

@@ -1,5 +1,6 @@
 package graft.ml
 
+import breeze.linalg.{DenseMatrix, DenseVector}
 import graft.{SparkSpec, Tables}
 import graft.functions.Noise
 import org.apache.spark.sql.functions._
@@ -69,5 +70,38 @@ class PersistenceSpec extends SparkSpec {
     }
     // the untampered copy still loads
     assert(RbmImputerModel.load(s"$dir/m").weights.w === model.weights.w)
+  }
+
+  test("the saved weights are column-major, and column-major weights load as Breeze read them") {
+    // a save and a load that both transposed would pass the round trip
+    // above; a non-square model with distinct weights pins the order
+    val layout = imputer.fit(withMissing).layout
+    val (nv, nh) = (layout.width, 4)
+    assert(nv != nh)
+    def wAt(i: Int, j: Int): Double = 0.05 * (i * nh + j + 1) * (if ((i + j) % 2 == 0) 1 else -1)
+    val model = new RbmImputerModel("nonsquare", layout,
+      new RbmWeights(nv, nh, Array.tabulate(nv * nh)(k => wAt(k / nh, k % nh)),
+        Array.tabulate(nv)(i => 0.1 * i - 0.2), Array.tabulate(nh)(j => 0.3 - 0.1 * j)),
+      Nil).setKeyCol("c_custkey")
+    val dir = java.nio.file.Files.createTempDirectory("rbm_order").toString
+    model.save(s"$dir/m")
+    val colMajor = Seq.tabulate(nv * nh)(k => wAt(k % nv, k / nv))
+    assert(spark.read.parquet(s"$dir/m/data").select("w").head().getSeq[Double](0) === colMajor)
+
+    // a ModelData written in that order, as earlier versions wrote it
+    import spark.implicits._
+    val d = RbmImputerModel.ModelData("colmajor", "c_custkey",
+      layout.numerics.map(_.name), layout.numerics.map(_.min), layout.numerics.map(_.max),
+      layout.categoricals.map(_.name), layout.categoricals.map(_.values),
+      nv, nh, colMajor, model.weights.vBias.toSeq, model.weights.hBias.toSeq, Nil)
+    model.save(s"$dir/c")
+    Seq(d).toDS().write.mode("overwrite").parquet(s"$dir/c/data")
+    val loaded = RbmImputerModel.load(s"$dir/c")
+    // Breeze's DenseMatrix constructor reads its data column-major
+    val reference = RbmCoreSpec.BreezeWeights(new DenseMatrix(nv, nh, colMajor.toArray),
+      DenseVector(d.vBias.toArray), DenseVector(d.hBias.toArray))
+    assert(RbmImputerSpec.bitRows(loaded.transform(withMissing), "c_custkey") ===
+      RbmImputerSpec.bitRows(
+        RbmImputerSpec.rowPathTransform(loaded, withMissing, Some(reference)), "c_custkey"))
   }
 }

@@ -11,6 +11,7 @@ import org.apache.spark.sql.types._
 /** Reference-contract invariants (SURVEY §5.1 i–v) for the full
   * Estimator/Model imputation pipeline on real test data. */
 class RbmImputerSpec extends SparkSpec {
+  import RbmImputerSpec._
 
   private lazy val withMissing = {
     val base = Tables.customer(spark, sf0001)
@@ -62,36 +63,6 @@ class RbmImputerSpec extends SparkSpec {
       withMissing.schema.fieldNames.toSeq)
     assert(imputed.count() === withMissing.count())
   }
-
-  /** `transform` as it ran before the native expression: a
-    * `mapPartitions` over `Encoders.row` with one Breeze reconstruct per
-    * 1024-row block (RbmCoreSpec.reconstruct is that Breeze pass). */
-  private def rowPathTransform(model: RbmImputerModel, df: DataFrame): DataFrame = {
-    val encoded = Encoding.encode(df, model.layout, model.getOrDefault(model.keyCol))
-    val outSchema = encoded.schema.add(Encoding.ReconCol, ArrayType(DoubleType, false))
-    val bc = spark.sparkContext.broadcast(model.weights)
-    val vIdx = encoded.schema.fieldIndex(Encoding.VCol)
-    val width = model.layout.width
-    val reconDf = encoded.mapPartitions { it: Iterator[Row] =>
-      it.grouped(1024).flatMap { batch =>
-        val v = DenseMatrix.tabulate(batch.size, width)(
-          (r, c) => batch(r).getSeq[Double](vIdx)(c))
-        val recon = RbmCoreSpec.reconstruct(bc.value, v)
-        batch.iterator.zipWithIndex.map { case (row, r) =>
-          Row.fromSeq(row.toSeq :+ (0 until width).map(recon(r, _)))
-        }
-      }
-    }(Encoders.row(outSchema))
-    Encoding.decode(reconDf, model.layout, df.schema.fieldNames.toSeq)
-  }
-
-  /** Rows sorted by key, doubles and floats as raw bits. */
-  private def bitRows(df: DataFrame): Seq[Seq[Any]] =
-    df.orderBy("k").collect().toSeq.map(_.toSeq.map {
-      case d: Double => java.lang.Double.doubleToRawLongBits(d)
-      case f: Float => java.lang.Float.floatToRawIntBits(f)
-      case v => v
-    })
 
   /** 3000 rows: a double column with nulls and NaN, an int column with
     * nulls, a float column, two string categoricals; some rows all
@@ -153,12 +124,12 @@ class RbmImputerSpec extends SparkSpec {
     assert(got.filter(Seq("d", "i", "f").map(c => col(c).isNull || isnan(col(c)))
       .reduce(_ || _)).count() === 0)
     assert(got.schema === want.schema)
-    assert(bitRows(got) === bitRows(want))
+    assert(bitRows(got, "k") === bitRows(want, "k"))
     // and on the customer frame, through the default configuration
     val model = new RbmImputer().setNumericCols(Seq("c_acctbal"))
       .setCategoricalCols(Seq("c_mktsegment")).setKeyCol("c_custkey")
       .setMaxEpochs(3).fit(withMissing)
-    def byKey(df: DataFrame) = bitRows(df.withColumnRenamed("c_custkey", "k"))
+    def byKey(df: DataFrame) = bitRows(df, "c_custkey")
     assert(byKey(model.transform(withMissing)) ===
       byKey(rowPathTransform(model, withMissing)))
   }
@@ -183,4 +154,40 @@ class RbmImputerSpec extends SparkSpec {
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(_.getMessage.contains("the model has")), e.toString)
   }
+}
+
+object RbmImputerSpec {
+
+  /** `transform` as it ran before the native expression: a
+    * `mapPartitions` over `Encoders.row` with one Breeze reconstruct per
+    * 1024-row block (RbmCoreSpec.reconstruct is that Breeze pass) with
+    * `weights`, by default the model's own. */
+  def rowPathTransform(model: RbmImputerModel, df: DataFrame,
+                       weights: Option[RbmCoreSpec.BreezeWeights] = None): DataFrame = {
+    val encoded = Encoding.encode(df, model.layout, model.getOrDefault(model.keyCol))
+    val outSchema = encoded.schema.add(Encoding.ReconCol, ArrayType(DoubleType, false))
+    val bc = df.sparkSession.sparkContext.broadcast(
+      weights.getOrElse(RbmCoreSpec.toBreeze(model.weights)))
+    val vIdx = encoded.schema.fieldIndex(Encoding.VCol)
+    val width = model.layout.width
+    val reconDf = encoded.mapPartitions { it: Iterator[Row] =>
+      it.grouped(1024).flatMap { batch =>
+        val v = DenseMatrix.tabulate(batch.size, width)(
+          (r, c) => batch(r).getSeq[Double](vIdx)(c))
+        val recon = RbmCoreSpec.reconstruct(bc.value, v)
+        batch.iterator.zipWithIndex.map { case (row, r) =>
+          Row.fromSeq(row.toSeq :+ (0 until width).map(recon(r, _)))
+        }
+      }
+    }(Encoders.row(outSchema))
+    Encoding.decode(reconDf, model.layout, df.schema.fieldNames.toSeq)
+  }
+
+  /** Rows sorted by `key`, doubles and floats as raw bits. */
+  def bitRows(df: DataFrame, key: String): Seq[Seq[Any]] =
+    df.orderBy(key).collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case f: Float => java.lang.Float.floatToRawIntBits(f)
+      case v => v
+    })
 }

@@ -62,23 +62,45 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("a null or wrong-dimension embedding is neither indexed in a cell nor served") {
-    // such a row has null probes: a null __cell on disk, no probed cell
+    // such a row has no cell: the build fails on it, naming its __id,
+    // and as a query it probes nothing
     import spark.implicits._
     val embs = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding")).localCheckpoint()
-    val bad = Seq((900001L, null: Seq[Float]), (900002L, Seq(1.0f, 2.0f)))
+    val dim = embs.head().getSeq[Float](1).length
+    val bad = Seq((900001L, null: Seq[java.lang.Float]),
+        (900002L, Seq[java.lang.Float](1.0f, 2.0f)),
+        (900003L, Seq.tabulate[java.lang.Float](dim)(i => if (i == 1) null else 0.5f)))
       .toDF("vec_id", "embedding")
-    val badIds = Seq(900001L, 900002L)
+    val badIds = Seq(900001L, 900002L, 900003L)
+    def assertNames(id: Long)(build: => Unit): Unit = {
+      val e = intercept[Exception](build)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains(s"__id $id ")), e.toString)
+    }
+    // write: here every row is in the k-means sample, and the fit fails
+    // on a bad row first; a row outside the sample meets `assign`
+    for (id <- badIds) intercept[Exception] {
+      IvfIndex.write(embs.unionByName(bad.filter(col("vec_id") === id)), "vec_id",
+        "embedding", table = "ivf_null_vectors", path = s"$tmp/idx_null_$id",
+        numCentroids = 4, seed = 42L, numBuckets = 2)
+    }
     IvfIndex.write(embs, "vec_id", "embedding", table = "ivf_null_vectors",
       path = s"$tmp/idx_null", numCentroids = 4, seed = 42L, numBuckets = 2)
-    IvfIndex.merge(spark, "ivf_null_vectors", s"$tmp/idx_null",
-      bad, "vec_id", "embedding", numBuckets = 2)
-    val cells = spark.table("ivf_null_vectors")
-      .filter(col("__id").isin(badIds: _*)).select("__cell").collect()
-    assert(cells.length === 2 && cells.forall(_.isNullAt(0)),
-      s"bad rows got cells ${cells.mkString(", ")}")
-    // every cell probed: a bad row is never a neighbor, and as a query
-    // it probes nothing
+    val centers = IvfIndex.readCentroids(spark, s"$tmp/idx_null")
+    for (id <- badIds) assertNames(id) {
+      IvfIndex.assign(embs.unionByName(bad.filter(col("vec_id") === id)), "vec_id",
+        "embedding", centers).write.format("noop").mode("overwrite").save()
+    }
+    val indexed = spark.table("ivf_null_vectors").count()
+    for (id <- badIds) assertNames(id) {
+      IvfIndex.merge(spark, "ivf_null_vectors", s"$tmp/idx_null",
+        bad.filter(col("vec_id") === id), "vec_id", "embedding", numBuckets = 2)
+    }
+    // a failed merge appends nothing
+    spark.catalog.refreshTable("ivf_null_vectors")
+    assert(spark.table("ivf_null_vectors").count() === indexed)
+    // every cell probed: a bad row as a query probes nothing
     val served = IvfIndex.topK(spark, "ivf_null_vectors", s"$tmp/idx_null",
         embs.unionByName(bad), "vec_id", "embedding", k = 600, nProbe = 4)
       .localCheckpoint()
