@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every SparkEntry query at the env-given SF and
@@ -80,8 +79,16 @@ object Bench {
 
   /** A string field of a bench.json line (`"key":"value"`, value as
     * escaped in the file), or None. */
-  private def stampOf(txt: String, key: String): Option[String] =
+  private[graft] def stampOf(txt: String, key: String): Option[String] =
     ("\"" + key + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(txt).map(_.group(1))
+
+  /** The part of the environment stamp only bench.json carries (the
+    * stdout line keeps its budget): parquet files per table and the git
+    * revision. `sf` and `cpus` are written by every line. */
+  private[graft] def stampFields(s: LocalRun.Stamp): String =
+    s.filesPerTable.map { case (t, n) => s"\"${esc(t)}\":$n" }
+      .mkString(",\"files_per_table\":{", ",", "}") +
+      s",\"git_rev\":\"${esc(s.gitRev)}\""
 
   /** Load the prior-bench text for the contamination guard: the live
     * `outPath` when present (same-workspace re-runs), else the
@@ -110,7 +117,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalRun.cpus
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
     // dev-only knobs: run a comma-given subset / repeat each query N
     // times (perf isolation on a noisy host); driver runs use defaults
@@ -127,21 +134,9 @@ object Bench {
     // row count doesn't need (projection-tail queries timed only
     // their scans). noop times what a consumer actually reads.
     val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "noop")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like every other entry point: the events TIMESTAMP_NTZ→LTZ
-      // normalization is session-timezone-dependent, and a bench that
-      // loads shifted timestamps times DIFFERENT work than the
-      // verified queries (different rows pass the ts filters)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warm-up so the first timed query doesn't absorb
-    // one-time startup cost (measured ~4-8s on the first action)
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = LocalRun.session(cpus)
+    LocalRun.warmUp(spark)
+    val stamp = LocalRun.stamp(sfDir, cpus)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val results = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -249,7 +244,7 @@ object Bench {
       famSuspects.map(s => "\"" + esc(s) + "\"").mkString("[", ",", "]")
     val full = render(
       results.map { case (k, v) => s"\"${esc(k)}\":$v" }.toSeq,
-      s""","families":$famJson,"family_suspect":$famSuspectJson""")
+      s""","families":$famJson,"family_suspect":$famSuspectJson${stampFields(stamp)}""")
     Files.writeString(Paths.get(outPath), full + "\n")
     val byTimeDesc = results.toSeq.sortBy { case (_, v) => -v }
       .map { case (k, v) => s"\"${esc(k)}\":${fmt(v, "%.2f")}" }

@@ -20,7 +20,9 @@ import org.apache.spark.sql.types._
   * counts — analysis/codegen goes super-linear in k when each centroid
   * is its own subtree, and even the matrix form pays interpreted
   * higher-order-function eval with per-element allocations (measured
-  * via ProfileKnnAnn at k=233 over 54k rows: ~6-9 s of planning per
+  * at k=233 over 54k rows by a stage probe since deleted and kept in git
+  * history — `graft.tools.Profile impute_lineitem_knn_ann` profiles the
+  * query today: ~6-9 s of planning per
   * action in subtree form, ~6 s per pass in HOF form; this expression
   * runs the same pass in well under a second — one virtual call per
   * row into a primitive loop, k·dim flops, zero allocation until the

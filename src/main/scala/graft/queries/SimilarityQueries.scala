@@ -100,7 +100,8 @@ object SimilarityQueries extends Registry {
     // with no re-fit and zero Exchange on the index side. Rows-only
     // (served ≡ recompute is IvfIndexSpec-pinned); the build cost is
     // deliberately inside the timed query so the bench row carries the
-    // full build+serve story (ProfileIvfIndex splits the two).
+    // full build+serve story (`graft.tools.Profile c3_ivf_serve` splits
+    // the two: build = index write, action = serve).
     "c3_ivf_serve" -> ((s, d) => {
       val embs = Tables.embeddings(s, d)
       // Query batch is a key PREDICATE, not limit(100) — LIMIT without

@@ -171,7 +171,7 @@ object ProductQuantize {
     require(k >= 1)
     // default = 16k, the measured knee: the ADC join dominates cost,
     // so a larger shortlist is ~free while recall@10 climbs 0.67→0.80
-    // (ProfilePq grid, SCALING.md) — the round-6 "don't ship the
+    // (SCALING.md's PQ shortlist grid) — the round-6 "don't ship the
     // speed-tuned default" lesson applied at birth
     val short = if (shortlist > 0) shortlist else 16 * k
     require(short >= k, s"shortlist $short < k $k")

@@ -1,8 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{LocalRun, Tables}
 import graft.similarity.Cosine
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures the ANN recall/cost trade-off against the EXACT top-k
@@ -15,12 +15,8 @@ object AnnRecallCurve {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = LocalRun.session(LocalRun.cpus)
+    LocalRun.warmUp(spark)
 
     val embs = Tables.embeddings(spark, sfDir).localCheckpoint()
     val n = embs.count()

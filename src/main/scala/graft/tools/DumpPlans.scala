@@ -1,8 +1,8 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import graft.LocalRun
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
 /** Regenerates PLANS.md: the formatted physical plans of the headline
   * queries, executed (so AQE finalizes) at sf0.001. The plans are the
@@ -183,12 +183,7 @@ object DumpPlans {
     "d149_rename_drop")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalRun.session("4")
     val sf = "/root/testdata/sf0.001"
     val out = new StringBuilder
     out ++= "# PLANS — formatted physical plans of the headline queries\n\n"

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{LocalRun, Tables}
 import graft.streaming.StreamingNearDedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: measure online-dedup drop precision against exact
@@ -10,11 +9,7 @@ import org.apache.spark.sql.functions._
   * near-dup of some earlier doc?), across band geometries. */
 object MeasureOnlinePrecision {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalRun.session(LocalRun.cpus)
     for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text")).cache()
       val n = docs.count()

@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{LocalRun, Tables}
 import graft.operators.SnapshotDiff
 import graft.sources.VersionedTable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the manifest-change-feed diff (SnapshotDiff.incremental)
@@ -18,11 +17,8 @@ object ProfileChangeFeed {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = LocalRun.session(LocalRun.cpus)
+    LocalRun.warmUp(spark)
 
     // corpus = documents unioned mult x with re-keyed ids (the
     // ScaleProbe recipe), bucketed 64-way; the batch touches ONE id
@@ -49,13 +45,7 @@ object ProfileChangeFeed {
       s"(carried ${total - added.size})")
     def time(tag: String)(op: => Long): Unit = {
       op // warm
-      var best = Double.MaxValue
-      for (_ <- 1 to reps) {
-        val t = System.nanoTime()
-        val n = op
-        best = math.min(best, (System.nanoTime() - t) / 1e9)
-        require(n > 0)
-      }
+      val best = LocalRun.bestSeconds(reps)(require(op > 0))
       println(f"$tag%-24s $best%6.2f s (min of $reps)")
     }
     time("full diff")(SnapshotDiff.diff(

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{LocalRun, Tables}
 import graft.functions.Noise
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Serve-side probe for the persisted KNN donor index: the serving
@@ -20,13 +19,8 @@ object ProfileKnnServe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = LocalRun.session(LocalRun.cpus)
+    LocalRun.warmUp(spark)
 
     val feats = Seq("l_quantity", "l_discount", "l_tax")
     val li = Tables.lineitem(spark, sfDir)

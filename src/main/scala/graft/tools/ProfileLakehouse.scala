@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{LocalRun, Tables}
 import graft.sources.{VersionedTable, ZOrder}
 import graft.streaming.StreamingMerge
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 10×-scale probes for the round-15 lakehouse additions, pinning
@@ -19,20 +18,12 @@ object ProfileLakehouse {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = LocalRun.session(LocalRun.cpus)
+    LocalRun.warmUp(spark)
 
     def time(tag: String)(op: => Any): Unit = {
       op // warm
-      var best = Double.MaxValue
-      for (_ <- 1 to reps) {
-        val t = System.nanoTime()
-        op
-        best = math.min(best, (System.nanoTime() - t) / 1e9)
-      }
+      val best = LocalRun.bestSeconds(reps)(op)
       println(f"[mult=$mult] $tag%-28s $best%7.3f s (min of $reps)")
     }
 

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{LocalRun, Tables}
 import org.apache.spark.sql.functions._
 
 /** Incremental-maintenance probe for the persisted BM25 index: the
@@ -18,13 +17,8 @@ object ProfileLexicalMerge {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = LocalRun.session(LocalRun.cpus)
+    LocalRun.warmUp(spark)
 
     val docs = Tables.documents(spark, sfDir).localCheckpoint()
     val maxId = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)

@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{LocalRun, Tables}
 import graft.operators.IncrementalAgg
 import graft.sources.VersionedTable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Pins the change-feed aggregate maintenance cost claim ("∝ the
@@ -23,11 +22,8 @@ object ProfileMaintainSweep {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = LocalRun.session(LocalRun.cpus)
+    LocalRun.warmUp(spark)
 
     val docs = Tables.documents(spark, sfDir)
     val maxId = docs.agg(max("doc_id")).head.getLong(0)
@@ -62,13 +58,10 @@ object ProfileMaintainSweep {
       val (added, removed) =
         VersionedTable.changedFiles(spark, dir, prevV, curV)
       val oldState = materializedState(prevV)
-      var best = Double.MaxValue
-      var n = 0L
-      for (_ <- 1 to reps) {
-        val t = System.nanoTime()
+      var n = 0
+      val best = LocalRun.bestSeconds(reps) {
         n = IncrementalAgg.maintainOverVersions(spark, dir, prevV,
           curV, oldState, Seq("source"), "n_chars").collect().length
-        best = math.min(best, (System.nanoTime() - t) / 1e9)
       }
       println(f"k=$k%-3d touched: +${added.size}%3d -${removed.size}%3d " +
         f"files  maintain $best%6.3f s  ($n groups, min of $reps)")

@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.LocalRun
 import graft.sources.VersionedTable
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the round-16 SIDECAR METADATA PLANE against file-count
@@ -35,10 +35,7 @@ object ProfileMetaPlane {
   def main(args: Array[String]): Unit = {
     val counts =
       if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(16, 256)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalRun.session(LocalRun.cpus)
     import spark.implicits._
 
     for (f <- counts) {

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.LocalRun
 import graft.sources.VersionedTable
-import org.apache.spark.sql.SparkSession
 
 /** Measures the VersionedTable METADATA hot path against version
   * history depth — the round-14 checkpoint-summary work. Commits `n`
@@ -17,10 +17,7 @@ object ProfileVersionedMeta {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toInt).getOrElse(1000)
     val reps = args.lift(1).map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalRun.session(LocalRun.cpus)
     val dir = java.nio.file.Files
       .createTempDirectory("vt_meta_probe").toString
     VersionedTable.drop(spark, dir)

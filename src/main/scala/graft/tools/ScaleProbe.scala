@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{LocalRun, SparkEntry, Tables}
 import org.apache.spark.sql.functions._
 
 /** Synthetic 10× scale probe for the dedup/ANN/impute families: every 100 TB
@@ -19,13 +18,8 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = LocalRun.session(LocalRun.cpus)
+    LocalRun.warmUp(spark)
 
     val bigDir = java.nio.file.Files
       .createTempDirectory(s"graft_scale_${mult}x").toString

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{GraftExtensions, SparkEntry}
-import org.apache.spark.sql.SparkSession
+import graft.{LocalRun, SparkEntry}
 
 /** Dev loop for a single oracle row: dump ONE (or a few) named
   * SparkEntry queries to parquet plus their oracle SQL, so a local
@@ -13,14 +12,7 @@ object VerifyOne {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: VerifyOne <sfDir> <outDir> <name>...")
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalRun.session(LocalRun.cpus)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

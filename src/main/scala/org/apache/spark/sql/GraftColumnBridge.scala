@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * converters to graft's native expressions (graft.expressions.*). The
   * alternative — registering every function in every session — would
   * make library Columns unusable in sessions the caller configures
-  * without GraftExtensions. This is the only spot where graft reaches
-  * into Spark's package namespace, kept to two one-line delegations.
+  * without GraftExtensions. Kept to two one-line delegations; the only
+  * other spot in Spark's package namespace is `GraftListenerBus`.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

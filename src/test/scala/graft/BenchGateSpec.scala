@@ -116,4 +116,31 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.parseFamilies("{}").isEmpty)
     assert(Bench.parseFamilies("no json at all").isEmpty)
   }
+
+  test("bench.json's stamp carries parquet files per table and the git " +
+    "revision, and the prior parse still reads a line that has them") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("benchstamp_sf")
+    Files.writeString(dir.resolve("region.parquet"), "one file")
+    val split = Files.createDirectories(dir.resolve("lineitem.parquet"))
+    (0 until 3).foreach(i => Files.writeString(split.resolve(s"part-0000$i.snappy.parquet"), "x"))
+    Files.writeString(split.resolve("_SUCCESS"), "")
+    Files.writeString(split.resolve(".part-00000.snappy.parquet.crc"), "")
+    Files.writeString(dir.resolve("notes.txt"), "not a table")
+    val stamp = LocalRun.stamp(dir.toString, "8")
+    assert(stamp.filesPerTable === Seq("lineitem" -> 3, "region" -> 1))
+    val hex = "[0-9a-f]{40}"
+    assert(stamp.gitRev == "unknown" || stamp.gitRev.matches(hex), stamp.gitRev)
+    if (Files.isDirectory(Paths.get(".git"))) assert(stamp.gitRev.matches(hex), stamp.gitRev)
+    val fields = Bench.stampFields(stamp)
+    assert(fields === s""","files_per_table":{"lineitem":3,"region":1},"git_rev":"${stamp.gitRev}"""")
+    val line = s"""{"metric":"total","queries":{"q1":1.0},"errors":{}$fields,""" +
+      s""""sf":"$dir","cpus":"8"}"""
+    assert(Bench.stampOf(line, "git_rev") === Some(stamp.gitRev))
+    val file = dir.resolve("bench.json")
+    Files.writeString(file, line)
+    val prior = Bench.loadPriorText(file.toString, dir.resolve("nope.json").toString,
+      dir.toString, "8")
+    assert(Bench.parseQueries(prior) === Map("q1" -> 1.0))
+  }
 }

@@ -3,8 +3,6 @@ package graft
 import graft.impute.KnnImpute
 import graft.similarity.{IvfIndex, IvfPq}
 import graft.text.LexicalIndex
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** The serving indexes read their small parquet side tables (stats,
@@ -34,27 +32,8 @@ class SideTableReadsSpec extends SparkSpec {
   private def inferred(path: String) = spark.read.parquet(path).schema
 
   /** Spark jobs started while `body` runs on this thread. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"side-table-jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "job count")
-      body
-      TestListenerBus.drain(sc)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
+  private def jobsOf(body: => Any): Int =
+    Ledger.measure(spark, "side-table read")(body)._2.jobs.size
 
   test("known side-table schemas equal what write and merge leave on disk") {
     assert(inferred(s"$lexical/stats") === LexicalIndex.StatsSchema)
