@@ -307,8 +307,8 @@ object KnnImpute {
   // tail; spec-pinned row equality).
 
   /** Schema of the donor index's `path/stats` side table: the min and
-    * max of every feature column. Reads pass it to the reader, so
-    * serving runs no schema-inference job. */
+    * max of every feature column, checked against the file on every
+    * read. */
   private[graft] def statsSchema(featureCols: Seq[String])
       : org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(featureCols.flatMap(c => Seq(
@@ -319,8 +319,8 @@ object KnnImpute {
 
   private def readStats(spark: org.apache.spark.sql.SparkSession,
                         path: String, featureCols: Seq[String]) =
-    spark.read.schema(statsSchema(featureCols)).parquet(s"$path/stats")
-      .collect()(0)
+    graft.sources.SideTable.read(spark, s"$path/stats",
+      statsSchema(featureCols)).head
 
   /** Build + persist the donor index: `path/stats`, `path/centroids`,
     * and the bucketed donor table (catalog name `table`). */

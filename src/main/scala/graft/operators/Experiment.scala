@@ -437,8 +437,10 @@ object Experiment {
     * designed arm's observed-vs-expected fit) and the row itself IS
     * the flag.
     *
-    * Scale: one hash agg on variant (map-side partials), a broadcast
-    * outer join against the k designed keys, then window + projection
+    * Scale: one hash agg on variant (map-side partials), a full outer
+    * join against the k designed keys (Spark has no broadcast hash
+    * join for a full outer join, so it shuffles both sides — ≤ k +
+    * rogue rows each), then window + projection
     * over ≤ k + rogue rows. Output one row per variant (designed or
     * observed): `variant, n_obs, n_expected (6dp), contrib (6dp),
     * chi2 (6dp, repeated — the total over designed arms), n_total,
@@ -462,7 +464,7 @@ object Experiment {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.orderBy(col("variant"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    counts.join(broadcast(designed), Seq("variant"), "full_outer")
+    counts.join(designed, Seq("variant"), "full_outer")
       .withColumn("n_obs", coalesce(col("n_obs"), lit(0L)))
       .crossJoin(broadcast(total))
       .withColumn("__exp", col("n_total").cast("double") * col("__share"))

@@ -233,7 +233,8 @@ object SimilarityQueries extends Registry {
       graft.similarity.RetrievalEval.metrics(run, qrels, k = 5)
     }),
     // C3: lexical SERVING shape — persist the inverted index (bucketed
-    // postings + terms + stats), then answer the query batch from it.
+    // postings + 1-row stats), then answer the query batch from it
+    // (df counted from the bucket-pruned postings scan).
     // Served scores are bit-identical to the one-shot recompute, so
     // this sits under the SAME exact DuckDB oracle as c3_bm25_retrieval
     // — the strongest correctness statement of the three persisted
@@ -248,9 +249,9 @@ object SimilarityQueries extends Registry {
     }),
     // C3: INCREMENTAL index maintenance — the nightly-batch shape the
     // build-once indexes lacked: build on 3/4 of the corpus, MERGE the
-    // remaining quarter (postings append + vocabulary-sized df re-sum
-    // + 1-row stats rewrite — cost scales with the batch, never the
-    // indexed corpus), then serve. Every persisted aggregate is
+    // remaining quarter (postings append + 1-row stats rewrite — cost
+    // scales with the batch, never the indexed corpus or its
+    // vocabulary), then serve. Every persisted aggregate is
     // additive over disjoint doc sets, so (build ∪ merge) ≡ one-shot
     // rebuild BIT-EXACT — same DuckDB oracle as the full-corpus serve.
     "c3_bm25_serve_incr" -> ((s, d) => {

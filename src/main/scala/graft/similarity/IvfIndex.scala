@@ -1,7 +1,8 @@
 package graft.similarity
 
-import graft.sources.TableSink
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{SideTable, TableSink}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,17 +18,18 @@ import org.apache.spark.sql.types._
   *      `path/centroids`   — nlist rows (i, c), kilobytes; and
   *      a BUCKETED catalog table of (__cell, __id, __v unit vector)
   *    via [[TableSink.writeBucketed]], bucketed + sorted on `__cell`.
-  *  - [[topK]]: load the centroids (driver-side, tiny), compute probes
-  *    for the QUERY batch only, and join the exploded probes against
-  *    the bucketed table on `__cell`. The bucketed side's layout IS
-  *    the join partitioning, so the index — the 100 TB side — is read
-  *    in place with NO Exchange (asserted in IvfIndexSpec); only the
-  *    query batch (small by definition in a serving path) shuffles to
-  *    meet it. No k-means fit, no corpus re-assignment, no full-corpus
-  *    probe computation.
+  *  - [[topK]]: load the centroids (on the driver, no job), compute
+  *    probes for the QUERY batch only, and plan that batch (small by
+  *    contract) on the driver: its probed cells enter the plan as a
+  *    `cell → (id, unit vector)` map literal and as a `__cell IN (...)`
+  *    filter, so the vector scan opens only the probed cells' buckets
+  *    and is read in place — no join and NO Exchange on the index side
+  *    (asserted in IvfIndexSpec); the only shuffle is the per-query
+  *    rank window over the scored candidates. No k-means fit, no
+  *    corpus re-assignment, no full-corpus probe computation.
   *
   * Served results are IDENTICAL to a fresh `ivfTopK` run with the same
-  * parameters (same centers → same probes → same per-cell joins →
+  * parameters (same centers → same probes → same per-cell candidates →
   * same rounded scores; IvfIndexSpec asserts row equality).
   */
 object IvfIndex {
@@ -79,17 +81,17 @@ object IvfIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
   }
 
-  /** Load the persisted centroid matrix (nlist × dim — kilobytes): one
-    * scan job under the known schema, ordered on the driver. */
+  /** Load the persisted centroid matrix (nlist × dim — kilobytes) on
+    * the driver, with no Spark job, ordered by cell. */
   def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] =
-    spark.read.schema(CentroidsSchema).parquet(s"$path/centroids").collect()
+    SideTable.read(spark, s"$path/centroids", CentroidsSchema)
       .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   /** INCREMENTALLY add vectors to a persisted index under its FROZEN
     * geometry: new vectors are assigned to their nearest EXISTING
     * centroid (the same arithmetic [[write]] uses) and appended as one
     * batch-sized bucketed file set — existing files untouched, the
-    * serve path's zero-Exchange join preserved. The merged table is
+    * serve path's zero-Exchange scan preserved. The merged table is
     * BIT-IDENTICAL to what [[write]] would have produced for the union
     * corpus GIVEN the same centroids (IvfIndexSpec pins it), so
     * [[topK]] immediately sees the new vectors.
@@ -114,21 +116,32 @@ object IvfIndex {
 
   /** Approximate top-k neighbors for `queries` against the PERSISTED
     * index — no quantizer fit, no corpus re-assignment. Queries probe
-    * their `nProbe` nearest cells and join the bucketed vector table
-    * in place (zero Exchange on the index side). */
+    * their `nProbe` nearest cells; the scan reads only the probed
+    * cells' buckets, in place (zero Exchange on the index side). */
   def topK(spark: SparkSession, table: String, path: String,
            queries: DataFrame, idCol: String, vecCol: String, k: Int,
            nProbe: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val centers = readCentroids(spark, path)
-    val querySide = Cosine.ivfProbes(queries, idCol, vecCol, centers, nProbe)
-      .select(col("__id").as("a"), col("__v").as("__va"),
-        explode(col("__probes")).as("__qcell"))
-    val indexSide = spark.table(table)
-      .select(col("__cell"), col("__id").as("b"), col("__v").as("__vb"))
+    // the query side, planned on the driver: every query under each
+    // cell it probes (a local frame collects with no job); a query
+    // with null probes (null or malformed vector) probes nothing
+    val probes = Cosine.ivfProbes(queries, idCol, vecCol, centers, nProbe)
+    val query = StructType(Seq(probes.schema("__id").copy(name = "a"),
+      probes.schema("__v").copy(name = "__va")))
+    val byCell = probes.collect().toSeq.flatMap { r =>
+      Option(r.getSeq[Int](2)).toSeq.flatten.map(_ -> Row(r.get(0), r.get(1)))
+    }.groupMap(_._1)(_._2)
+    val queriesOf = GraftColumnBridge.column(Literal.create(byCell,
+      MapType(IntegerType, ArrayType(query, containsNull = false))))
     val w = Window.partitionBy(col("a")).orderBy(col("score").desc, col("b").asc)
-    querySide.join(indexSide,
-        col("__qcell") === col("__cell") && col("a") =!= col("b"))
+    spark.table(table)
+      .filter(col("__cell").isin(byCell.keys.toSeq: _*))
+      .select(explode(element_at(queriesOf, col("__cell"))).as("__q"),
+        col("__id").as("b"), col("__v").as("__vb"))
+      .select(col("__q.a").as("a"), col("b"), col("__q.__va").as("__va"),
+        col("__vb"))
+      .filter(col("a") =!= col("b"))
       .withColumn("score", round(Cosine.dot(col("__va"), col("__vb")), 6))
       .withColumn("rank", row_number().over(w).cast("bigint"))
       .filter(col("rank") <= k)

@@ -64,12 +64,13 @@ object IvfPq {
     StructField("j", IntegerType), StructField("c", IntegerType),
     StructField("centroid", ArrayType(DoubleType))))
 
-  /** Load the persisted PQ codebooks (m × ksub × sub — kilobytes). Rows
-    * are placed by `(j, c)`, so they need no ordering. */
+  /** Load the persisted PQ codebooks (m × ksub × sub — kilobytes) on
+    * the driver, with no Spark job. Rows are placed by `(j, c)`, so
+    * they need no ordering. */
   def readCodebooks(spark: SparkSession, path: String,
                     dim: Int): ProductQuantize.Codebooks = {
-    val rows = spark.read.schema(CodebooksSchema)
-      .parquet(s"$path/codebooks").collect()
+    val rows = graft.sources.SideTable.read(spark, s"$path/codebooks",
+      CodebooksSchema)
     val m = rows.map(_.getInt(0)).max + 1
     val ksub = rows.map(_.getInt(1)).max + 1
     val books = Array.ofDim[Array[Double]](m, ksub)

@@ -1,10 +1,11 @@
 package graft.text
 
-import graft.operators.TopPerGroup
-import graft.sources.TableSink
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.sources.{SideTable, TableSink}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types._
 
 /** Persisted INVERTED INDEX for BM25 serving — the lexical sibling of
   * [[graft.similarity.IvfIndex]] (dense ANN) and
@@ -18,40 +19,39 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    lengths, DENORMALIZE dl into the posting rows (one build-time
   *    join so serving needs no doc-side join at all), and persist
   *      `path/stats`    — 1 row (n_docs, total_len);
-  *      `path/terms`    — vocabulary-sized (term, df);
   *      a BUCKETED catalog table of (term, doc_id, tf, dl)
   *    via [[TableSink.writeBucketed]], bucketed + sorted on `term`.
-  *  - [[topK]]: read stats (driver, 1 row), enrich the QUERY batch's
-  *    terms with df from the terms table (query side is small by
-  *    contract — it broadcasts into the vocabulary scan), then join
-  *    the enriched query terms against the bucketed postings with the
-  *    query side BROADCAST: the index — the 100 TB side — is read in
-  *    place with NO Exchange (LexicalIndexSpec asserts it). Only the
-  *    candidate contributions (corpus rows matching a query term,
+  *  - [[topK]]: read stats on the driver (parquet-hadoop, no job) and
+  *    plan the QUERY batch on the driver too (small by contract): its
+  *    terms enter the plan as a `term → query ids` map literal and as
+  *    a `term IN (...)` filter, so the postings scan opens only the
+  *    buckets that hold those terms. A term's df is the number of its
+  *    postings rows, counted by a window over the pruned scan — the
+  *    scan is bucketed on `term`, so the index (the 100 TB side) is
+  *    read in place with NO Exchange (LexicalIndexSpec asserts it).
+  *    Only the candidate contributions (postings of a query term,
   *    post df-stopping) reach the per-(query, doc) score shuffle.
   *
   * Served scores are IDENTICAL to a fresh [[Bm25.topK]] run with the
-  * same parameters: the persisted tf/dl/df/stats are the same
-  * aggregates the one-shot path computes, and the scoring projection
-  * runs the same fixed double-op sequence on the same 6-dp grid — so
-  * the serve queries sit under the SAME exact DuckDB oracle
+  * same parameters: the persisted tf/dl/stats and the counted df are
+  * the same aggregates the one-shot path computes, and the scoring
+  * projection runs the same fixed double-op sequence on the same 6-dp
+  * grid — so the serve queries sit under the SAME exact DuckDB oracle
   * ([[Bm25.sql]]) as the recompute, not a weaker rows-only check.
+  *
+  * Indexes written before df moved into the read also carry a
+  * vocabulary-sized `path/terms` table; nothing reads it, and merges no
+  * longer update it.
   */
 object LexicalIndex {
 
-  /** Schemas of the `stats` and `terms` side tables as [[write]] and
-    * [[merge]] leave them (SideTableReadsSpec pins them). Reads pass
-    * them to the reader, so serving runs no schema-inference job. */
+  /** Schema of the `stats` side table as [[write]] and [[merge]]
+    * leave it (SideTableReadsSpec pins it). */
   val StatsSchema: StructType = StructType(Seq(
     StructField("n_docs", LongType), StructField("total_len", LongType)))
-  val TermsSchema: StructType = StructType(Seq(
-    StructField("term", StringType), StructField("df", LongType)))
 
   private def readStats(spark: SparkSession, path: String): Row =
-    spark.read.schema(StatsSchema).parquet(s"$path/stats").collect()(0)
-
-  private def readTerms(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(TermsSchema).parquet(s"$path/terms")
+    SideTable.read(spark, s"$path/stats", StatsSchema).head
 
   /** Build and persist the index. `table` is the catalog name for the
     * bucketed postings (bucket metadata needs a catalog); `path` is the
@@ -77,15 +77,12 @@ object LexicalIndex {
     postings.agg(countDistinct(col("doc_id")).as("n_docs"),
         sum(col("tf")).as("total_len"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-    postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$path/terms")
     // dl by window instead of a join against a separate doclen frame:
     // one shuffle of postings by doc_id, no second materialization,
     // the same exact integers (sum of longs)
     TableSink.writeBucketed(
       postings.withColumn("dl", sum(col("tf")).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("doc_id"))))
+          Window.partitionBy(col("doc_id"))))
         .select(col("term"), col("doc_id"), col("tf"), col("dl")),
       table, s"$path/postings", Seq("term"), numBuckets)
   }
@@ -99,16 +96,16 @@ object LexicalIndex {
     *    — the batch's rows APPEND to the bucketed table
     *    ([[graft.sources.TableSink.appendBucketed]]): one new file set
     *    sized to the batch, existing files untouched, bucket spec (and
-    *    the serve path's zero-Exchange join) preserved;
-    *  - `terms` df counts add: old table ∪ batch df, summed per term
-    *    (a VOCABULARY-sized job — grows sub-linearly with the corpus);
-    *  - `stats` is one row of additive counts.
+    *    the serve path's zero-Exchange scan) preserved;
+    *  - `stats` is one row of additive counts;
+    *  - df needs no upkeep: [[topK]] counts a term's postings rows,
+    *    and the appended rows are the batch's share of that count.
     *
     * Because BM25 reads df/n_docs/total_len at QUERY time, the merged
     * index serves scores BIT-IDENTICAL to a one-shot [[write]] of the
     * union corpus (LexicalIndexSpec pins it; the `c3_bm25_serve_incr`
     * row puts it under the exact DuckDB oracle). Per-batch cost scales
-    * with the batch + vocabulary, never the indexed corpus.
+    * with the batch, never the indexed corpus or its vocabulary.
     *
     * CONTRACT: batch doc ids must be NEW — postings are append-only
     * facts, so re-merging an already-indexed document would double its
@@ -131,7 +128,7 @@ object LexicalIndex {
     // instead of a separate limit-1 scan of the batch source; a batch
     // whose docs carry no tokens is equally a no-op — such docs never
     // enter the index (dl derives from tokens), so there is nothing
-    // to add to stats/terms/postings
+    // to add to stats/postings
     if (postings.isEmpty) return
     // stats: one 1-row read, one batch-postings fold, one additive
     // rewrite (same integers as the old doclen fold: docs with >= 1
@@ -144,20 +141,11 @@ object LexicalIndex {
         old.getLong(old.fieldIndex("total_len")) + add.getLong(1)))
       .toDF("n_docs", "total_len")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-    // terms: vocabulary-sized union-sum, MATERIALIZED (localCheckpoint)
-    // before overwriting the directory it was read from
-    val updatedTerms = readTerms(spark, path)
-      .unionByName(postings.groupBy(col("term"))
-        .agg(count(lit(1)).as("df")))
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .localCheckpoint()
-    updatedTerms.write.mode("overwrite").parquet(s"$path/terms")
     // postings: append the batch's rows to the bucketed table, dl by
     // window (no doclen join, same exact integers)
     graft.sources.TableSink.appendBucketed(
       postings.withColumn("dl", sum(col("tf")).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("doc_id"))))
+          Window.partitionBy(col("doc_id"))))
         .select(col("term"), col("doc_id"), col("tf"), col("dl")),
       table, Seq("term"), numBuckets)
     // appended files must be visible to an already-resolved table
@@ -179,21 +167,30 @@ object LexicalIndex {
     val stats = readStats(spark, path)
     val nDocs = stats.getLong(stats.fieldIndex("n_docs"))
     val totalLen = stats.getLong(stats.fieldIndex("total_len"))
-    // query terms + df: the query batch broadcasts into the
-    // vocabulary-sized terms scan (map-side), then the enriched result
-    // (still query-sized) broadcasts into the postings scan
-    val qterms = readTerms(spark, path)
-      .join(broadcast(queries
-        .select(col(queryId).as("query_id"),
-          explode(TextFunctions.tokens(col(queryText))).as("term"))
-        .distinct()), "term")
+    // the query side, planned on the driver: each distinct term and the
+    // ids of the queries holding it (a local frame collects with no job)
+    val qs = queries.select(col(queryId).as("query_id"),
+      TextFunctions.tokens(col(queryText)).as("terms"))
+    val idField = qs.schema("query_id")
+    val byTerm = qs.collect().toSeq
+      .flatMap(r => Option(r.getSeq[String](1)).toSeq.flatten.map(_ -> r.get(0)))
+      .distinct.groupMap(_._1)(_._2)
+    val queriesOf = GraftColumnBridge.column(Literal.create(byTerm,
+      MapType(StringType, ArrayType(idField.dataType, idField.nullable))))
+    // the IN filter prunes the scan to the terms' buckets; every
+    // postings row of a kept term stays, so the window's count is the
+    // term's df, and the bucketed layout already clusters it by term
+    val postings = spark.table(table)
+      .filter(col("term").isin(byTerm.keys.toSeq: _*))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
       .filter(col("df").cast("double") <=
         lit(maxDfFraction) * lit(nDocs.toDouble))
     // scoring projection: the EXACT op sequence of Bm25.topK with
     // n_docs/total_len as literals carrying the same values — IEEE
     // double ops are value-functions, so the scores are bit-identical
-    val contrib = spark.table(table)
-      .join(broadcast(qterms), "term")
+    val contrib = postings
+      .select(explode(element_at(queriesOf, col("term"))).as("query_id"),
+        col("doc_id"), col("tf"), col("dl"), col("df"))
       .withColumn("__c", round(
         log((lit(nDocs.toDouble) - col("df").cast("double")
             + lit(0.5)) / (col("df").cast("double") + lit(0.5)) + lit(1.0))
@@ -205,7 +202,13 @@ object LexicalIndex {
         .cast("decimal(18,6)"))
     val scored = contrib.groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("__c")).cast("decimal(18,6)").as("score"))
-    TopPerGroup.topN(scored, "query_id", "score", "doc_id", k)
+    // one window per query: Spark runs its partial top-k (a
+    // WindowGroupLimit) before the shuffle on query_id, so a query
+    // matching half the corpus still ships only k rows per task
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("doc_id").asc)
+    scored.withColumn("rank", row_number().over(w).cast("bigint"))
+      .filter(col("rank") <= k)
       .withColumn("score", col("score").cast("double"))
   }
 }

@@ -31,9 +31,9 @@ object DumpPlans {
     "c2_incremental_neardup",
     // round-7: the HTML-strip scan-shaped projection (one codegen
     // span) and the persisted-IVF build+serve query — its dumped plan
-    // is the SHIPPED query's plan (index side: bucketed scan, no
-    // Exchange; only the query batch shuffles — IvfIndexSpec asserts
-    // it on the executed plan)
+    // is the SHIPPED query's plan (index side: a bucketed scan pruned
+    // to the probed cells, no Exchange; the query batch is a plan
+    // literal — IvfIndexSpec asserts it on the executed plan)
     "c7_html_strip", "c3_ivf_serve",
     // round-7 late: snapshot diff — shows the (id, md5) reduction
     // BELOW the full-outer join's Exchanges (no raw text shuffled)
@@ -79,9 +79,10 @@ object DumpPlans {
     // round-8c: quantile bins — one percentile agg broadcast back,
     // codegen'd indicator-sum projection (stats-attach shape)
     "d25_quantile_bins",
-    // round-8d: BM25 serving — the bucketed postings scan joined by
-    // BROADCAST of the enriched query terms (zero index-side
-    // Exchange); only candidate scores shuffle
+    // round-8d: BM25 serving — the bucketed postings scan pruned to
+    // the query terms (a plan literal), df by a window the bucketing
+    // already clusters (zero index-side Exchange); only candidate
+    // scores and the per-query rank shuffle
     "c3_bm25_serve",
     // round-8d: Welch A/B — per-user partial-agg'd shuffle + a 1-row
     // conditional aggregate, variance without a second scan

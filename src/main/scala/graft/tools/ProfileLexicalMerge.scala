@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * 1× and a `mult`× corpus (re-keyed unions, the ScaleProbe recipe),
   * then merge the SAME fixed-size batch into each and time the merge.
   * A corpus-shaped merge would scale ≈ mult×; the shipped shape should
-  * stay near-flat (its only corpus-linked job is the vocabulary-sized
-  * terms re-sum). Results recorded in BASELINE.md.
+  * stay flat (it touches the batch and the 1-row stats only). Results
+  * recorded in BASELINE.md.
   * Usage: runMain graft.tools.ProfileLexicalMerge [sfDir] [mult]
   */
 object ProfileLexicalMerge {

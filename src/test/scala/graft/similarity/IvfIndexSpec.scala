@@ -1,17 +1,38 @@
 package graft.similarity
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The persisted-index contract: serving from the index returns
   * EXACTLY what a fresh ivfTopK recompute returns (same quantizer fit
   * parameters ⇒ same centers ⇒ same probes ⇒ same scores), and the
-  * index side of the serving join is read in place — bucketed scan,
-  * no Exchange. */
+  * index side of the serving read is read in place — a bucketed scan
+  * pruned to the probed cells, no Exchange. */
 class IvfIndexSpec extends SparkSpec {
 
   private lazy val tmp =
     java.nio.file.Files.createTempDirectory("ivf_index").toString
+
+  /** The read as a join of the exploded query probes against the
+    * bucketed table on the cell — what [[IvfIndex.topK]] computes
+    * without the join. */
+  private def probeJoin(table: String, path: String, queries: DataFrame,
+                        k: Int, nProbe: Int): DataFrame = {
+    val centers = IvfIndex.readCentroids(spark, path)
+    val w = Window.partitionBy(col("a")).orderBy(col("score").desc, col("b").asc)
+    Cosine.ivfProbes(queries, "vec_id", "embedding", centers, nProbe)
+      .select(col("__id").as("a"), col("__v").as("__va"),
+        explode(col("__probes")).as("__qcell"))
+      .join(spark.table(table).select(col("__cell"), col("__id").as("b"),
+          col("__v").as("__vb")),
+        col("__qcell") === col("__cell") && col("a") =!= col("b"))
+      .withColumn("score", round(Cosine.dot(col("__va"), col("__vb")), 6))
+      .withColumn("rank", row_number().over(w).cast("bigint"))
+      .filter(col("rank") <= k)
+      .select("a", "b", "score", "rank")
+  }
 
   test("serving from the persisted index equals a fresh ivfTopK recompute") {
     val embs = Tables.embeddings(spark, sf001).localCheckpoint()
@@ -113,30 +134,74 @@ class IvfIndexSpec extends SparkSpec {
     val embs = Tables.embeddings(spark, sf001).localCheckpoint()
     IvfIndex.write(embs, "vec_id", "embedding", table = "ivf_plan_vectors",
       path = s"$tmp/idx2", numCentroids = 8, seed = 42L, numBuckets = 4)
-    // force the shuffle join family: a broadcast of the query side
-    // would trivially avoid exchanges and hide the property under test
-    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val served = IvfIndex.topK(spark, "ivf_plan_vectors", s"$tmp/idx2",
-        embs.limit(50), "vec_id", "embedding", k = 3, nProbe = 2)
+    // AdaptiveSparkPlan.toString prints Final AND Initial plans —
+    // assert on the final section only or every exchange counts twice
+    def physical(served: DataFrame): String = {
       served.collect() // finalize the AQE plan before reading it
-      // AdaptiveSparkPlan.toString prints Final AND Initial plans —
-      // assert on the final section only or every exchange counts twice
-      val physical = served.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      assert(physical.contains("Bucketed: true"),
-        s"index scan not bucketed:\n${physical.take(2000)}")
-      // exactly the query side shuffles to meet the bucketed layout;
-      // the index (100 TB side) must contribute zero hash exchanges.
-      // (The window's rank exchange partitions on `a`, not __cell.)
-      val cellExchanges = "Exchange hashpartitioning\\(__(q?)cell".r
-        .findAllIn(physical).size
-      assert(cellExchanges <= 1,
-        s"expected at most the query-side exchange on the cell key, " +
-          s"found $cellExchanges:\n${physical.take(2000)}")
-      assert(!physical.contains("Exchange hashpartitioning(__cell"),
-        s"the INDEX side shuffled:\n${physical.take(2000)}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      served.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    }
+    // the probed cells are a literal in the plan: the index (100 TB
+    // side) contributes zero hash exchanges on the cell key; the only
+    // exchange is the rank window's, on `a`
+    val batch = physical(IvfIndex.topK(spark, "ivf_plan_vectors", s"$tmp/idx2",
+      embs.limit(50), "vec_id", "embedding", k = 3, nProbe = 2))
+    assert("Exchange hashpartitioning\\(__(q?)cell".r.findAllIn(batch).isEmpty,
+      s"a cell-keyed exchange:\n${batch.take(2000)}")
+    // one query probing one cell opens one of the four buckets
+    val one = physical(IvfIndex.topK(spark, "ivf_plan_vectors", s"$tmp/idx2",
+      local(embs.filter(col("vec_id") === 7)), "vec_id", "embedding", k = 3,
+      nProbe = 1))
+    assert(one.contains("SelectedBucketsCount: 1 out of 4"),
+      s"the scan was not pruned to the probed cell:\n${one.take(2000)}")
+  }
+
+  test("serving equals the probe join after a write and three merges, on every query shape") {
+    val embs = Tables.embeddings(spark, sf001).select("vec_id", "embedding")
+      .localCheckpoint()
+    IvfIndex.write(embs.filter(pmod(col("vec_id"), lit(4)) === 0), "vec_id",
+      "embedding", table = "ivf_parity_vectors", path = s"$tmp/idx_parity",
+      numCentroids = 8, seed = 42L, numBuckets = 4)
+    // 64 indexed queries over 8 cells share their cells; right after
+    // the write the read equals the one-shot recompute
+    val queries = local(embs.filter(pmod(col("vec_id"), lit(4)) === 0 &&
+      col("vec_id") < 256))
+    assert(queries.count() === 64)
+    assertSameAnswer(IvfIndex.topK(spark, "ivf_parity_vectors", s"$tmp/idx_parity",
+        queries, "vec_id", "embedding", k = 5, nProbe = 2),
+      Cosine.ivfTopK(embs.filter(pmod(col("vec_id"), lit(4)) === 0), "vec_id",
+        "embedding", k = 5, numCentroids = 8, nProbe = 2, seed = 42L)
+        .filter(col("a") < 256))
+    for (part <- 1 to 3)
+      IvfIndex.merge(spark, "ivf_parity_vectors", s"$tmp/idx_parity",
+        embs.filter(pmod(col("vec_id"), lit(4)) === part), "vec_id", "embedding",
+        numBuckets = 4)
+    // after the merges, under the frozen centroids: plus a null
+    // embedding (probes nothing) and a repeated query row
+    val mixed = local(embs.filter(col("vec_id") < 64),
+      Row(900001L, null), embs.filter(col("vec_id") === 5).head())
+    for (nProbe <- Seq(1, 3))
+      assertSameAnswer(IvfIndex.topK(spark, "ivf_parity_vectors", s"$tmp/idx_parity",
+          mixed, "vec_id", "embedding", k = 5, nProbe = nProbe),
+        probeJoin("ivf_parity_vectors", s"$tmp/idx_parity", mixed, 5, nProbe))
+    val empty = mixed.limit(0)
+    assertSameAnswer(IvfIndex.topK(spark, "ivf_parity_vectors", s"$tmp/idx_parity",
+        empty, "vec_id", "embedding", k = 5),
+      probeJoin("ivf_parity_vectors", s"$tmp/idx_parity", empty, 5, 2))
+    assert(IvfIndex.topK(spark, "ivf_parity_vectors", s"$tmp/idx_parity",
+      empty, "vec_id", "embedding", k = 5).isEmpty)
+  }
+
+  test("a rewrite at the same path serves the new centroids, not the old ones") {
+    val embs = Tables.embeddings(spark, sf001).localCheckpoint()
+    for ((corpus, cells) <- Seq((embs.filter(col("vec_id") % 2 === 0), 8),
+                                (embs.filter(col("vec_id") % 3 === 0), 4))) {
+      IvfIndex.write(corpus, "vec_id", "embedding", table = "ivf_rewrite_vectors",
+        path = s"$tmp/idx_rewrite", numCentroids = cells, seed = 42L, numBuckets = 4)
+      assert(IvfIndex.readCentroids(spark, s"$tmp/idx_rewrite").length === cells)
+      assertSameAnswer(IvfIndex.topK(spark, "ivf_rewrite_vectors", s"$tmp/idx_rewrite",
+          corpus, "vec_id", "embedding", k = 3, nProbe = 2),
+        Cosine.ivfTopK(corpus, "vec_id", "embedding", k = 3, numCentroids = cells,
+          nProbe = 2, seed = 42L))
+    }
   }
 }
